@@ -30,7 +30,12 @@ from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
 
-from databricks_demo_feature_store_spark.sources.writers import merge_upsert
+from databricks_demo_feature_store_spark.sources.writers import (
+    _write,
+    merge_upsert,
+    replace_json,
+    staged_rewrite,
+)
 
 METADATA_FILE = "_feature_metadata.json"
 
@@ -120,8 +125,10 @@ class FeatureStoreManager:
         with open(meta_path) as fh:
             return json.load(fh)
 
-    def _update_metadata(self, spec: FeatureTableSpec) -> None:
-        """Registry write — reference ``_update_metadata`` (:1490-1508)."""
+    def _update_metadata(self, spec: FeatureTableSpec, table_dir: str) -> None:
+        """Registry write — reference ``_update_metadata`` (:1490-1508) —
+        into ``table_dir``: the live table, or a staging dir so the
+        metadata is promoted with the data."""
         meta = {
             "name": spec.name,
             "description": spec.description,
@@ -131,16 +138,9 @@ class FeatureStoreManager:
             "source_tables": list(spec.source_tables),
             "check_constraints": list(spec.check_constraints),
         }
-        os.makedirs(self.path(spec.name), exist_ok=True)
-        with open(os.path.join(self.path(spec.name), METADATA_FILE), "w") as fh:
-            json.dump(meta, fh, indent=2, sort_keys=True)
-
-    # writer-internal directory suffixes (sources/writers.py _swap_dirs
-    # and its callers): crash debris with these names must never be
-    # listed as registered tables — a leftover staging dir now carries
-    # the registry metadata file too (atomic-promotion discipline), so
-    # name-based exclusion is the only reliable tell
-    _INTERNAL_SUFFIXES = ("__old", "__staging", "__compact", "__forget")
+        replace_json(
+            os.path.join(table_dir, METADATA_FILE), meta, indent=2, sort_keys=True
+        )
 
     def _is_writer_debris(self, name: str, siblings: set[str]) -> bool:
         """Precise writer-internal match (ADVICE r12: a bare endswith hid a
@@ -233,40 +233,33 @@ class FeatureStoreManager:
                 )
             needs_overwrite = True
 
+        partition_by = list(spec.partition_by) or None
         if needs_overwrite or not self.exists(spec.name):
             # Unpartitioned by default (reference :1656-1663); spec can
             # opt into a hive layout (see FeatureTableSpec.partition_by).
-            out_df = df
-            if spec.partition_by:
-                # one shuffle on the layout columns: without it every
-                # task writes into every partition dir (tasks × dirs
-                # small files — writers._write has the same guard)
-                out_df = df.repartition(*spec.partition_by)
-            writer = out_df.write.format(self.fmt).mode("overwrite")
-            if spec.partition_by:
-                writer = writer.partitionBy(*spec.partition_by)
-            writer.save(path)
+            # Staged like every rewrite, so a frame that reads this table
+            # stays readable until the swap.
+            with staged_rewrite(path) as staging:
+                _write(df, staging, self.fmt, "overwrite", partition_by)
+                self._update_metadata(spec, staging)
         else:
-            keys = list(spec.primary_keys)
-            update_columns = diff.new_columns or None
             merge_upsert(
                 df,
                 path,
-                keys,
+                list(spec.primary_keys),
                 fmt=self.fmt,
-                partition_by=list(spec.partition_by) or None,
-                update_columns=update_columns,
+                partition_by=partition_by,
+                update_columns=diff.new_columns or None,
             )
-        self._update_metadata(spec)
+            self._update_metadata(spec, path)
         return diff
-
 
     def save_many(
         self,
         items,
         mode: str = "merge",
         policy: EvolutionPolicy = EvolutionPolicy.EVOLVE,
-        max_workers: int = 3,
+        max_workers: int | None = None,
     ) -> dict:
         """Save several INDEPENDENT feature tables with overlapped jobs
         (guide §2.6: Spark happily runs several jobs at once inside one
@@ -276,9 +269,9 @@ class FeatureStoreManager:
         thread pool back-fills those cores. 2–3 in flight is plenty.
 
         ``items`` is an iterable of ``(df, spec)`` pairs targeting
-        DISTINCT tables (validated — two writers on one table would race
-        the non-atomic overwrite). Per-table writes and registry
-        sidecars are filesystem-independent, so concurrency cannot
+        DISTINCT tables (validated — two writers on one table would make
+        one of them fail with ``ConcurrentWriteError``). Per-table writes
+        and registry sidecars are filesystem-independent, so concurrency cannot
         change any table's content; result is the same per-name
         :class:`SchemaDiff` map the sequential loop would produce.
 
@@ -287,8 +280,8 @@ class FeatureStoreManager:
         completion (their tables and metadata land) before the exception
         propagates — callers must treat a raised ``save_many`` as
         partially applied, exactly like a crash mid-sequential-loop.
-        ``SPARK_GRAFT_SAVE_MANY_WORKERS`` overrides the pool size only
-        when ``max_workers`` is left at its default."""
+        ``max_workers=None`` takes the pool size from
+        ``SPARK_GRAFT_SAVE_MANY_WORKERS``, else 3; an explicit value wins."""
         from concurrent.futures import ThreadPoolExecutor
 
         items = list(items)
@@ -301,10 +294,8 @@ class FeatureStoreManager:
             df, spec = item
             return spec.name, self.save(df, spec, mode=mode, policy=policy)
 
-        if max_workers == 3:  # default left alone: env may tune it
-            max_workers = int(
-                os.environ.get("SPARK_GRAFT_SAVE_MANY_WORKERS", str(max_workers))
-            )
+        if max_workers is None:
+            max_workers = int(os.environ.get("SPARK_GRAFT_SAVE_MANY_WORKERS", "3"))
         if len(items) <= 1 or max_workers <= 1:
             return dict(map(_one, items))
         with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
@@ -400,10 +391,8 @@ def forget_entities(
 
     Shape per table: ONE broadcast left-anti join (the forget set is
     small by nature — a deletion request batch, never corpus-sized) and
-    a staged rewrite promoted by directory rename, so a crash never
-    leaves a half-deleted live table and a concurrent reader sees either
-    the old or the new version. Registry metadata survives the swap
-    (re-written after). Tables whose primary keys don't include
+    a staged rewrite (README "Commit protocol") that carries the registry
+    metadata with the data. Tables whose primary keys don't include
     ``key_col`` are reported untouched rather than silently skipped, so
     the audit is the compliance record: every table accounted for.
 
@@ -424,32 +413,12 @@ def forget_entities(
         if key_col not in pks or key_col not in df.columns:
             rows.append((name, False, df.count(), 0))
             continue
-        from databricks_demo_feature_store_spark.sources.writers import (
-            table_generation,
-        )
-
-        path = manager.path(name)
-        generation = table_generation(path)
-        before = df.count()
-        kept = df.join(
-            F.broadcast(forget), df[key_col] == forget[key_col], "left_anti"
-        )
-        staging = path.rstrip("/") + "__forget"
-        kept.write.format(manager.fmt).mode("overwrite").save(staging)
-        # Registry metadata rides IN the staging directory, so the rename
-        # promotes data and primary_keys in one atomic step. Writing it
-        # after the swap left a crash window that permanently lost
-        # primary_keys — after which every later forget_entities call saw
-        # key_col ∉ pks and silently stopped propagating deletions for
-        # this table (the worst failure mode for a compliance path).
-        if meta:
-            with open(
-                os.path.join(staging.removeprefix("file:"), METADATA_FILE), "w"
-            ) as fh:
-                json.dump(meta, fh, indent=2, sort_keys=True)
-        from databricks_demo_feature_store_spark.sources.writers import _swap_dirs
-
-        _swap_dirs(path, staging, expected_generation=generation)
+        with staged_rewrite(manager.path(name)) as staging:
+            df = manager.read(name)
+            before = df.count()
+            df.join(
+                F.broadcast(forget), df[key_col] == forget[key_col], "left_anti"
+            ).write.format(manager.fmt).mode("overwrite").save(staging)
         after = manager.read(name).count()
         rows.append((name, True, after, before - after))
     out = manager.spark.createDataFrame(

@@ -19,7 +19,7 @@ that prunes the source scan (predicate reaches the parquet scan; with the
 source bucketed by entity the semi-join is shuffle-free), the pipeline
 runs on that slice only, and the write replaces exactly the affected
 entities' rows (Delta: ``MERGE`` with a source-scoped delete; parquet
-fallback: anti-join + staged swap).
+fallback: anti-join + staged rewrite).
 """
 
 from __future__ import annotations
@@ -28,7 +28,11 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from databricks_demo_feature_store_spark.sources.writers import _swap_dirs, _write
+from databricks_demo_feature_store_spark.sources.writers import (
+    _read_folding_dv,
+    _write,
+    staged_rewrite,
+)
 
 
 def replace_entities(
@@ -46,32 +50,24 @@ def replace_entities(
     Delta form: ``MERGE ON t.entity = s.entity`` with
     ``whenMatchedDelete`` + append, or ``replaceWhere entity IN (...)``.
     Parquet fallback: kept = existing ⟕anti(entity) df, out = kept ∪ df,
-    staged write + directory swap (never delete-then-rewrite the live
-    table).
+    written through :func:`staged_rewrite`.
     """
     from pyspark.errors import AnalysisException
 
-    from databricks_demo_feature_store_spark.sources.writers import (
-        table_generation,
-    )
-
-    spark = df.sparkSession
-    generation = table_generation(path)
-    try:
-        existing = spark.read.format(fmt).load(path)
-    except AnalysisException:
-        # first write only: the table path does not exist yet. ONLY the
-        # analysis-time miss may fall through to the bootstrap overwrite —
-        # a transient read error overwriting the live table with one
-        # batch would be silent data loss
-        _write(df, path, fmt, "overwrite", partition_by)
-        return
-    touched = df.select(entity_col).distinct()
-    kept = existing.join(F.broadcast(touched), on=entity_col, how="left_anti")
-    out = kept.unionByName(df, allowMissingColumns=True)
-    staging = path.rstrip("/") + "__staging"
-    _write(out, staging, fmt, "overwrite", partition_by)
-    _swap_dirs(path, staging, expected_generation=generation)
+    with staged_rewrite(path) as staging:
+        try:
+            existing = _read_folding_dv(df.sparkSession, path, fmt)
+        except AnalysisException:
+            # first write only: the table path does not exist yet. ONLY the
+            # analysis-time miss may fall through to the bootstrap write —
+            # a transient read error replacing the live table with one
+            # batch would be silent data loss
+            out = df
+        else:
+            touched = df.select(entity_col).distinct()
+            kept = existing.join(F.broadcast(touched), on=entity_col, how="left_anti")
+            out = kept.unionByName(df, allowMissingColumns=True)
+        _write(out, staging, fmt, "overwrite", partition_by)
 
 
 def incremental_entity_refresh(

@@ -18,11 +18,12 @@ layout.
 
 Concurrency/crash discipline: the mapping file is written atomically
 (tmp + rename). The sidecar lives inside the table directory with an
-underscore name, invisible to plain parquet scans, and survives
-append-mode writes; staged full rewrites (compact / merge_upsert) read
-through plain column names, so tables under those writers should apply
-:func:`materialize_mapping` first — the guard in the writers' path is
-the reader's own missing-column error, never silent misnaming.
+underscore name, invisible to plain parquet scans; appends and staged
+rewrites keep it (README "Commit protocol"). Staged full rewrites
+(compact / merge_upsert) read through plain column names, so merges
+from logically-named frames should apply :func:`materialize_mapping`
+first — the guard in the writers' path is the reader's own
+missing-column error, never silent misnaming.
 """
 
 from __future__ import annotations
@@ -58,11 +59,9 @@ def load_mapping(table_path: str) -> dict[str, str]:
 
 
 def _save_mapping(table_path: str, mapping: dict[str, str]) -> None:
-    p = mapping_path(table_path)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(mapping, fh, indent=2, sort_keys=True)
-    os.rename(tmp, p)  # atomic on POSIX — readers see old or new, never half
+    from databricks_demo_feature_store_spark.sources.writers import replace_json
+
+    replace_json(mapping_path(table_path), mapping, indent=2, sort_keys=True)
 
 
 def _physical_columns(spark: SparkSession, table_path: str) -> list[str]:
@@ -136,33 +135,22 @@ def write_with_mapping(df: DataFrame, table_path: str, mode: str = "append") -> 
 
 
 def materialize_mapping(spark: SparkSession, table_path: str) -> int:
-    """Bake logical names into the files (staged-swap rewrite) and drop
-    the sidecar — the escape hatch before handing the table to a reader
-    or writer that does not speak the mapping. Returns renamed-column
-    count; no-op without a sidecar.
-
-    DV discipline (same contract as ``compact``/``merge_upsert`` via
-    ``_read_folding_dv``): the staged swap replaces the whole directory,
-    ``_dv`` sidecar included, so the rewrite MUST read with pending
-    row-level deletes folded out — a plain scan here would silently
-    resurrect deleted rows (for GDPR erasure, silent un-deletion)."""
+    """Bake logical names into the files and drop the sidecar — the
+    escape hatch before handing the table to a reader or writer that does
+    not speak the mapping. Returns renamed-column count; no-op without a
+    sidecar. A staged rewrite (README "Commit protocol") that reads with
+    pending deletion-vector deletes folded out."""
     from databricks_demo_feature_store_spark.sources.writers import (
         _read_folding_dv,
-        _swap_dirs,
-        table_generation,
+        staged_rewrite,
     )
 
     mapping = load_mapping(table_path)
     if not mapping:
         return 0
-    generation = table_generation(table_path)
-    base = _read_folding_dv(spark, table_path, "parquet")
-    live = base.select(
-        *[F.col(c).alias(mapping.get(c, c)) for c in base.columns]
-    ).localCheckpoint(eager=True)
-    staging = table_path.rstrip("/") + "__staging"
-    live.write.mode("overwrite").parquet(staging)
-    _swap_dirs(table_path, staging, expected_generation=generation)
-    # the sidecar was inside the replaced directory, so it is already
-    # gone; nothing to clean up
+    with staged_rewrite(table_path, drop=(MAPPING_FILE,)) as staging:
+        base = _read_folding_dv(spark, table_path, "parquet")
+        base.select(
+            *[F.col(c).alias(mapping.get(c, c)) for c in base.columns]
+        ).localCheckpoint(eager=True).write.mode("overwrite").parquet(staging)
     return len(mapping)

@@ -14,7 +14,7 @@ Positions are stable because parquet files are immutable:
 write time. Compaction/rewrite invalidates coordinates — so
 :func:`apply_deletes` (the Delta ``REORG TABLE ... APPLY (PURGE)`` twin)
 materializes the deletes into a rewritten table and clears the sidecar,
-through the same staged-swap discipline as every other writer here.
+through the same staged rewrite as every other writer here.
 
 Scale shape: the DV sidecar is tiny by construction (deleted coordinates
 only); the read path broadcasts it into a left-anti join against the
@@ -119,29 +119,21 @@ def read_with_deletes(spark: SparkSession, table_path: str) -> DataFrame:
 def apply_deletes(spark: SparkSession, table_path: str) -> int:
     """Materialize the deletion vectors: rewrite the table without the
     deleted rows and clear the sidecar (Delta ``REORG ... APPLY
-    (PURGE)``). Staged-swap promotion — a crash never leaves a
-    half-rewritten live table. Returns rows physically removed.
-
-    This is the moment coordinates die: after the swap the files are
-    new, so the sidecar MUST go with the same promotion (it lives inside
-    the table directory, and ``_swap_dirs`` replaces the whole dir —
-    the staging side simply doesn't carry one)."""
-    from databricks_demo_feature_store_spark.sources.writers import (
-        _swap_dirs,
-        table_generation,
-    )
+    (PURGE)``) through :func:`~.writers.staged_rewrite`, which drops the
+    sidecar with the old files (README "Commit protocol"). Returns rows
+    physically removed."""
+    from databricks_demo_feature_store_spark.sources.writers import staged_rewrite
 
     out = dv_path(table_path)
     if not os.path.isdir(out):
         return 0
-    generation = table_generation(table_path)
     # concurrent delete waves may append duplicate coordinates; the
     # physical count is over DISTINCT (file, row) pairs
     dv_count = spark.read.parquet(out).distinct().count()
     if not dv_count:
         return 0
-    live = read_with_deletes(spark, table_path).localCheckpoint(eager=True)
-    staging = table_path.rstrip("/") + "__staging"
-    live.write.mode("overwrite").parquet(staging)
-    _swap_dirs(table_path, staging, expected_generation=generation)
+    with staged_rewrite(table_path) as staging:
+        read_with_deletes(spark, table_path).localCheckpoint(eager=True).write.mode(
+            "overwrite"
+        ).parquet(staging)
     return dv_count

@@ -488,35 +488,26 @@ def write_stats_sidecar(
     re-harvest (pinned in tests/test_skipping.py), O(new files) instead
     of O(files). The right policy for append-mode writes.
     """
+    from databricks_demo_feature_store_spark.sources.writers import staged_rewrite
+
     sidecar_dir = stats_sidecar_path(table_path)
-    if incremental and os.path.isdir(sidecar_dir):
-        current = set(_list_part_files(table_path))
-        kept, have = _keep_present_rows(
-            spark, load_file_stats(spark, table_path), current
-        )
-        new_files = sorted(current - have)
-        stats = kept
-        if new_files:
-            stats = kept.unionByName(
-                harvest_file_stats(spark, table_path, columns, files=new_files)
+    # staged rewrite of the inner `data` dir only, so a sibling bloom
+    # sidecar under the same `_stats` survives a min/max-stats refresh
+    with staged_rewrite(sidecar_dir) as staging:
+        if incremental and os.path.isdir(sidecar_dir):
+            current = set(_list_part_files(table_path))
+            kept, have = _keep_present_rows(
+                spark, load_file_stats(spark, table_path), current
             )
-    else:
-        stats = harvest_file_stats(spark, table_path, columns)
-    out = stats_sidecar_path(table_path)
-    # writers._swap_dirs promotion (rename old aside, rename staging in,
-    # drop old): a crash mid-swap leaves the old sidecar recoverable in
-    # __old instead of lost, and the no-sidecar window shrinks from
-    # "whole staging write" (the previous rmtree-then-rename) to the gap
-    # between two renames. The swap is scoped to the inner `data` dir so
-    # a sibling bloom sidecar under the same `_stats` survives a
-    # min/max-stats refresh.
-    import uuid
-
-    from databricks_demo_feature_store_spark.sources.writers import _swap_dirs
-
-    staging = out + ".staging-" + uuid.uuid4().hex[:8]
-    stats.write.mode("overwrite").parquet(staging)
-    _swap_dirs(out, staging)
+            new_files = sorted(current - have)
+            stats = kept
+            if new_files:
+                stats = kept.unionByName(
+                    harvest_file_stats(spark, table_path, columns, files=new_files)
+                )
+        else:
+            stats = harvest_file_stats(spark, table_path, columns)
+        stats.write.mode("overwrite").parquet(staging)
     return load_file_stats(spark, table_path)
 
 
@@ -716,14 +707,10 @@ def _promote_bloom(
 ) -> DataFrame:
     """Stage-and-swap the bloom sidecar (the staging write may READ the
     old sidecar — the swap happens only after it materializes)."""
-    import uuid
+    from databricks_demo_feature_store_spark.sources.writers import staged_rewrite
 
-    from databricks_demo_feature_store_spark.sources.writers import _swap_dirs
-
-    out = bloom_sidecar_path(table_path)
-    staging = out + ".staging-" + uuid.uuid4().hex[:8]
-    blooms.write.mode("overwrite").parquet(staging)
-    _swap_dirs(out, staging)
+    with staged_rewrite(bloom_sidecar_path(table_path)) as staging:
+        blooms.write.mode("overwrite").parquet(staging)
     return load_bloom_stats(spark, table_path)
 
 

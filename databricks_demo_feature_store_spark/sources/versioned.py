@@ -27,6 +27,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from databricks_demo_feature_store_spark.sources.writers import replace_json
+
 MANIFEST = "_versions.json"
 COMMITS_DIR = "_commits"
 
@@ -100,22 +102,19 @@ class VersionedTable:
         commit log (the Delta ``_delta_log`` twin at marker granularity).
         A Structured Streaming file source over this directory turns
         version commits into a micro-batch trigger
-        (``streaming/ops.py`` ``stream_cdf_ivm``). Atomic tmp+rename;
-        the dot-prefixed tmp name is invisible to Hadoop file listings,
-        so a reader can never observe a half-written marker."""
+        (``streaming/ops.py`` ``stream_cdf_ivm``). Written with
+        :func:`replace_json`, so a reader never sees a half-written
+        marker."""
         d = os.path.join(self.path, COMMITS_DIR)
         os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".commit-{info.version}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": info.version,
-                    "timestamp": info.timestamp,
-                    "operation": info.operation,
-                },
-                fh,
-            )
-        os.rename(tmp, os.path.join(d, f"commit-{info.version}.json"))
+        replace_json(
+            os.path.join(d, f"commit-{info.version}.json"),
+            {
+                "version": info.version,
+                "timestamp": info.timestamp,
+                "operation": info.operation,
+            },
+        )
 
     def commits_path(self) -> str:
         return os.path.join(self.path, COMMITS_DIR)
@@ -150,9 +149,7 @@ class VersionedTable:
             ),
         )
         manifest = [vars(v) for v in reversed(self.history())] + [vars(info)]
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._manifest_path(), "w") as fh:
-            json.dump(manifest, fh, indent=2)
+        replace_json(self._manifest_path(), manifest, indent=2)
         self._write_commit_marker(info)
         return info
 
@@ -318,8 +315,7 @@ class VersionedTable:
             num_rows=restored.num_rows,
         )
         manifest = [vars(v) for v in reversed(history)] + [vars(info)]
-        with open(self._manifest_path(), "w") as fh:
-            json.dump(manifest, fh, indent=2)
+        replace_json(self._manifest_path(), manifest, indent=2)
         self._write_commit_marker(info)
         assert n_linked > 0 or restored.num_rows in (0, None)
         return info
@@ -352,9 +348,7 @@ class VersionedTable:
             operation=f"CLONE({self.path}@v{latest})",
             num_rows=src_info.num_rows,
         )
-        os.makedirs(target_path, exist_ok=True)
-        with open(os.path.join(target_path, MANIFEST), "w") as fh:
-            json.dump([vars(info)], fh, indent=2)
+        replace_json(os.path.join(target_path, MANIFEST), [vars(info)], indent=2)
         out = VersionedTable(self.spark, target_path, fmt=self.fmt)
         out._write_commit_marker(info)
         return out
@@ -375,8 +369,7 @@ class VersionedTable:
                 pass
             dropped.append(v.version)
         manifest = [vars(v) for v in reversed(history) if v.version in keep]
-        with open(self._manifest_path(), "w") as fh:
-            json.dump(manifest, fh, indent=2)
+        replace_json(self._manifest_path(), manifest, indent=2)
         return dropped
 
 

@@ -16,7 +16,13 @@ historical key so only affected partitions rewrite.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import json
+import os
+import re
+import shutil
+import uuid
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -95,8 +101,6 @@ def table_generation(path: str) -> tuple[int, int] | None:
     commit by another writer changes the token. Driver-side metadata,
     O(files) — the same cost class as ``maybe_compact``'s listing.
     ``None`` when the table does not exist yet."""
-    import os
-
     p = path.removeprefix("file:").rstrip("/")
     try:
         top = os.stat(p)
@@ -157,9 +161,6 @@ def _swap_dirs(live: str, staging: str, expected_generation=_UNCHECKED) -> None:
     commit inside it; the zero-window fix is an atomic log commit (Delta),
     which this emulation stands in for.
     """
-    import os
-    import shutil
-
     live = live.removeprefix("file:")
     staging = staging.removeprefix("file:")
     if expected_generation is not _UNCHECKED:
@@ -179,6 +180,97 @@ def _swap_dirs(live: str, staging: str, expected_generation=_UNCHECKED) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+# Sidecars that describe the table rather than its file set
+# (featurestore/manager.py METADATA_FILE, sources/column_mapping.py
+# MAPPING_FILE): every staged rewrite carries them forward. The file-set
+# sidecars (_dv, _stats, _manifest) name files the rewrite replaces, so
+# they drop with the old directory and are re-derived.
+TABLE_SIDECARS = ("_feature_metadata.json", "_column_mapping.json")
+
+
+@contextmanager
+def staged_rewrite(path: str, drop: Sequence[str] = ()) -> Iterator[str]:
+    """The one in-place table rewrite (README "Commit protocol").
+
+    Entry takes the :func:`table_generation` token, so build the read plan
+    inside the block. The block writes the new table into the yielded
+    ``<path>__staging-<uuid8>`` dir. On a clean exit the
+    :data:`TABLE_SIDECARS` not named in ``drop`` are copied forward (one
+    the block already wrote into staging wins) and :func:`_swap_dirs`
+    promotes staging, raising :class:`ConcurrentWriteError` if another
+    writer committed since entry. An exception removes the staging dir
+    and leaves the live table as it was."""
+    live = path.removeprefix("file:").rstrip("/")
+    generation = table_generation(live)
+    staging = f"{live}__staging-{uuid.uuid4().hex[:8]}"
+    try:
+        yield staging
+        for name in TABLE_SIDECARS:
+            src, dst = os.path.join(live, name), os.path.join(staging, name)
+            if name not in drop and os.path.exists(src) and not os.path.exists(dst):
+                shutil.copy2(src, dst)
+        _swap_dirs(live, staging, expected_generation=generation)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+
+
+_VERSION_DIR = re.compile(r"v(\d+)")
+
+
+def _versions(state_dir: str) -> list[int]:
+    try:
+        names = os.listdir(state_dir)
+    except FileNotFoundError:
+        return []
+    return [int(m.group(1)) for n in names if (m := _VERSION_DIR.fullmatch(n))]
+
+
+def latest_version(state_dir: str) -> int | None:
+    """Highest committed ``v<N>`` subdirectory of a streaming state dir,
+    ``None`` before the first commit (``_tmp_v<N>`` staging never
+    matches)."""
+    return max(_versions(state_dir), default=None)
+
+
+def commit_version(
+    state_dir: str,
+    version: int,
+    df: DataFrame,
+    marker: tuple[str, str] | None = None,
+) -> None:
+    """Commit ``df`` as ``v<version>`` of the streaming state under
+    ``state_dir`` (README "Commit protocol"): ``df`` is written to
+    ``_tmp_v<version>`` (overwriting a crashed attempt), the optional
+    ``marker=(file name, text)`` lands next to the data, one rename
+    publishes both, then every older ``v<N>`` is dropped. ``v<version>``
+    must not exist yet; a crash before the rename leaves the previous
+    version as the latest, a crash after it only leaves old versions that
+    readers never resolve."""
+    os.makedirs(state_dir, exist_ok=True)
+    staging = os.path.join(state_dir, f"_tmp_v{version}")
+    df.write.mode("overwrite").parquet(staging)
+    if marker is not None:
+        with open(os.path.join(staging, marker[0]), "w") as fh:
+            fh.write(marker[1])
+    os.rename(staging, os.path.join(state_dir, f"v{version}"))
+    for v in _versions(state_dir):
+        if v < version:
+            shutil.rmtree(os.path.join(state_dir, f"v{v}"), ignore_errors=True)
+
+
+def replace_json(path: str, obj, **dump_kwargs) -> None:
+    """Atomically replace the JSON file at ``path``: dump into a hidden
+    ``.<name>.tmp`` sibling, then one rename. A crash mid-dump leaves the
+    previous file intact; the dot prefix keeps the tmp file out of
+    Hadoop file listings."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, **dump_kwargs)
+    os.replace(tmp, path)
+
+
 def _read_folding_dv(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     """Scan ``path`` with pending deletion-vector deletes FOLDED OUT.
 
@@ -191,8 +283,6 @@ def _read_folding_dv(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     then bakes the deletes in, mirroring ``apply_deletes``.
     """
     if fmt == "parquet":
-        import os
-
         from databricks_demo_feature_store_spark.sources.deletion_vectors import (
             dv_path,
             read_with_deletes,
@@ -381,51 +471,38 @@ def merge_upsert(
 
     from pyspark.errors import AnalysisException
 
-    # optimistic concurrency: token BEFORE the read plan is built — any
-    # other writer's commit between here and the swap aborts the promotion
-    generation = table_generation(path)
-    try:
-        # DV-aware: a staged rewrite discards the _dv sidecar, so pending
-        # row-level deletes MUST fold into `existing` here or they resurrect
-        existing = _read_folding_dv(spark, path, fmt)
-        table_exists = True
-    except AnalysisException:
-        # only the analysis-time path miss means "no table yet" — any
-        # other failure must propagate, not bootstrap-overwrite the data
-        table_exists = False
-
-    if not table_exists:
-        _write(df, path, fmt, "overwrite", partition_by)
-        return
-
-    incoming = df
-    if update_columns:
-        # Matched rows: existing values except update_columns, which come
-        # from the incoming side; unmatched incoming rows insert whole.
-        upd = list(update_columns)
-        matched = (
-            existing.alias("t")
-            .join(incoming.alias("s"), on=keys, how="inner")
-            .select(
-                *[F.col(f"t.{c}").alias(c) for c in existing.columns if c not in keys and c not in upd],
-                *[F.col(f"s.{c}").alias(c) for c in upd],
-                *[F.col(f"t.{k}").alias(k) for k in keys],
-            )
-        )
-        unmatched_new = incoming.join(existing.select(*keys), on=keys, how="left_anti")
-        kept = existing.join(incoming.select(*keys), on=keys, how="left_anti")
-        out = kept.unionByName(matched, allowMissingColumns=True).unionByName(
-            unmatched_new, allowMissingColumns=True
-        )
-    else:
-        kept = existing.join(incoming.select(*keys), on=keys, how="left_anti")
-        out = kept.unionByName(incoming, allowMissingColumns=True)
-
-    # Self-overwrite safety: materialize to a temp location first, then
-    # promote via rename (never delete-then-rewrite the live table).
-    staging = path.rstrip("/") + "__staging"
-    _write(out, staging, fmt, "overwrite", partition_by)
-    _swap_dirs(path, staging, expected_generation=generation)
+    with staged_rewrite(path) as staging:
+        try:
+            # DV-aware: a staged rewrite discards the _dv sidecar, so pending
+            # row-level deletes MUST fold into `existing` here or they resurrect
+            existing = _read_folding_dv(spark, path, fmt)
+        except AnalysisException:
+            # only the analysis-time path miss means "no table yet" — any
+            # other failure must propagate, not bootstrap-overwrite the data
+            out = df
+        else:
+            kept = existing.join(df.select(*keys), on=keys, how="left_anti")
+            if update_columns:
+                # Matched rows: existing values except update_columns, which
+                # come from the incoming side; unmatched incoming rows insert
+                # whole.
+                upd = list(update_columns)
+                matched = (
+                    existing.alias("t")
+                    .join(df.alias("s"), on=keys, how="inner")
+                    .select(
+                        *[F.col(f"t.{c}").alias(c) for c in existing.columns if c not in keys and c not in upd],
+                        *[F.col(f"s.{c}").alias(c) for c in upd],
+                        *[F.col(f"t.{k}").alias(k) for k in keys],
+                    )
+                )
+                unmatched_new = df.join(existing.select(*keys), on=keys, how="left_anti")
+                out = kept.unionByName(matched, allowMissingColumns=True).unionByName(
+                    unmatched_new, allowMissingColumns=True
+                )
+            else:
+                out = kept.unionByName(df, allowMissingColumns=True)
+        _write(out, staging, fmt, "overwrite", partition_by)
 
 
 def compact(
@@ -449,14 +526,31 @@ def compact(
 
         DeltaTable.forPath(spark, path).optimize().executeCompaction()
         return
-    generation = table_generation(path)
-    # DV-aware for the same reason as merge_upsert: the swap below drops
-    # any _dv sidecar, so the rewrite must bake pending deletes in
-    df = _read_folding_dv(spark, path, fmt)
-    n = target_partitions or max(1, df.rdd.getNumPartitions() // 4)
-    staging = path.rstrip("/") + "__compact"
-    df.coalesce(n).write.format(fmt).mode("overwrite").save(staging)
-    _swap_dirs(path, staging, expected_generation=generation)
+    _rewrite_layout(
+        spark, path, fmt,
+        lambda df: df.coalesce(
+            target_partitions or max(1, df.rdd.getNumPartitions() // 4)
+        ),
+        stats_columns, bloom_columns,
+    )
+
+
+def _rewrite_layout(
+    spark: SparkSession,
+    path: str,
+    fmt: str,
+    layout: Callable[[DataFrame], DataFrame],
+    stats_columns: Sequence[str] | None,
+    bloom_columns: Sequence[str] | None,
+) -> None:
+    """Staged rewrite of the whole table through ``layout``, then a full
+    sidecar re-harvest for the new file set. DV-aware for the same reason
+    as :func:`merge_upsert`: the swap drops any ``_dv`` sidecar, so the
+    rewrite must bake pending deletes in."""
+    with staged_rewrite(path) as staging:
+        layout(_read_folding_dv(spark, path, fmt)).write.format(fmt).mode(
+            "overwrite"
+        ).save(staging)
     _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
 
 
@@ -491,8 +585,6 @@ def _policy_trips(path: str, policy: CompactionPolicy) -> bool:
     satisfy the policy's small-file trigger? O(files) metadata, no Spark
     job — cheap enough that ``save_table`` runs it once per append to
     decide whether the incremental sidecar refresh would be wasted."""
-    import os
-
     from databricks_demo_feature_store_spark.sources.skipping import (
         _list_part_files,
     )
@@ -520,11 +612,10 @@ def maybe_compact(
 
     The decision is size-based, not sidecar-based, so it works on tables
     that never opted into stats. The rewrite itself goes through the same
-    staged-swap + DV-fold discipline as :func:`compact`; with
+    staged rewrite as :func:`compact`; with
     ``zorder_by`` it is a :func:`cluster_by_zorder` rewrite (one range
     exchange + local sort) instead of a plain coalesce."""
     import math
-    import os
 
     from databricks_demo_feature_store_spark.sources.skipping import (
         _list_part_files,
@@ -543,15 +634,13 @@ def maybe_compact(
             cluster_by_zorder,
         )
 
-        generation = table_generation(path)
-        df = _read_folding_dv(spark, path, fmt)
-        clustered = cluster_by_zorder(
-            df, list(policy.zorder_by), bits=policy.zorder_bits, num_partitions=n
+        _rewrite_layout(
+            spark, path, fmt,
+            lambda df: cluster_by_zorder(
+                df, list(policy.zorder_by), bits=policy.zorder_bits, num_partitions=n
+            ),
+            stats_columns, bloom_columns,
         )
-        staging = path.rstrip("/") + "__compact"
-        clustered.write.format(fmt).mode("overwrite").save(staging)
-        _swap_dirs(path, staging, expected_generation=generation)
-        _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
     else:
         compact(
             spark, path, fmt, target_partitions=n,

@@ -37,6 +37,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from databricks_demo_feature_store_spark.sources.writers import (
+    commit_version,
+    latest_version,
+)
+
 _MEMORY_QUERY_IDS = itertools.count()
 
 # ---------------------------------------------------------------------------
@@ -577,24 +582,11 @@ def stream_ingest_corpus_dedup(
     )
 
 
-def _latest_cms_version(sketch_path: str) -> int | None:
-    """Highest committed sketch version (``v<batch_id>`` subdirectory)
-    under ``sketch_path``, or ``None`` when no batch has committed yet."""
-    import re as _re
-
-    try:
-        names = os.listdir(sketch_path)
-    except FileNotFoundError:
-        return None
-    versions = [int(n[1:]) for n in names if _re.fullmatch(r"v\d+", n)]
-    return max(versions) if versions else None
-
-
 def read_count_min_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
     """Read the latest committed sketch maintained by
     :func:`stream_count_min` (the highest ``v<batch_id>`` subdirectory —
     partially-written ``_tmp_*`` staging dirs are never visible here)."""
-    latest = _latest_cms_version(sketch_path)
+    latest = latest_version(sketch_path)
     if latest is None:
         raise FileNotFoundError(f"no committed sketch under {sketch_path}")
     return spark.read.parquet(os.path.join(sketch_path, f"v{latest}"))
@@ -613,22 +605,14 @@ def _merge_cms_batch(
     sketch. Returns ``True`` if the batch was applied, ``False`` if it was
     skipped because version ``batch_id`` (or later) is already committed —
     the crash-replay case (crash between commit-rename and checkpoint
-    commit must NOT double-count the batch).
-
-    Commit protocol: write the merged sketch to a staging dir, then one
-    atomic ``os.rename`` to ``v<batch_id>`` (the destination never exists
-    when we get here, so the rename either fully lands or fully doesn't —
-    no window where the sketch is missing or half-written), then
-    best-effort delete of superseded versions (readers always resolve the
-    MAX committed version, so leftover old dirs are harmless).
+    commit must NOT double-count the batch). The merged sketch commits as
+    ``v<batch_id>`` (README "Commit protocol").
     """
-    import shutil
-
     from databricks_demo_feature_store_spark.operators.sketches import (
         count_min_sketch,
     )
 
-    latest = _latest_cms_version(sketch_path)
+    latest = latest_version(sketch_path)
     if latest is not None and latest >= batch_id:
         return False  # already merged: replay after a post-commit crash
     if batch_df.isEmpty():
@@ -643,15 +627,8 @@ def _merge_cms_batch(
             .groupBy("row_idx", "bucket")
             .agg(F.sum("n").alias("n"))
         )
-    # the sketch is tiny (<= depth*width rows): collect-free single-file
-    # write via coalesce(1) into staging (overwrite clears a staging dir
-    # left by a pre-rename crash), then the atomic commit rename
-    os.makedirs(sketch_path, exist_ok=True)
-    staging = os.path.join(sketch_path, f"_tmp_v{batch_id}")
-    cells.coalesce(1).write.mode("overwrite").parquet(staging)
-    os.rename(staging, os.path.join(sketch_path, f"v{batch_id}"))
-    if latest is not None:
-        shutil.rmtree(os.path.join(sketch_path, f"v{latest}"), ignore_errors=True)
+    # the sketch is tiny (<= depth*width rows): collect-free single file
+    commit_version(sketch_path, batch_id, cells.coalesce(1))
     return True
 
 
@@ -677,12 +654,12 @@ def stream_count_min(
     foreachBatch read-merge-commit on a ≤ depth·width-row parquet — the
     rewrite cost is CONSTANT per batch regardless of history (this is
     the smallest possible streaming state: the sketch IS the aggregate).
-    Exactly-once under crash, not just under replay: each committed
-    sketch lives in a ``v<batch_id>`` subdirectory landed by ONE atomic
-    rename, and the merge SKIPS any batch_id at or below the committed
-    version (:func:`_merge_cms_batch`), so a batch replayed after a
-    crash between the sketch commit and the checkpoint commit is a
-    no-op instead of a double count. Read the standing sketch with
+    Exactly-once under crash, not just under replay: each sketch commits
+    as ``v<batch_id>`` (README "Commit protocol") and the merge SKIPS any
+    batch_id at or below the committed version
+    (:func:`_merge_cms_batch`), so a batch replayed after a crash between
+    the sketch commit and the checkpoint commit is a no-op instead of a
+    double count. Read the standing sketch with
     :func:`read_count_min_sketch` (it resolves the latest committed
     version). The sketch directory and the checkpoint share a lifetime —
     restarting with a FRESH checkpoint (batch ids reset to 0) against an
@@ -704,17 +681,6 @@ def stream_count_min(
     )
 
 
-def _latest_cdc_version(table_path: str) -> int | None:
-    import re as _re
-
-    try:
-        names = os.listdir(table_path)
-    except FileNotFoundError:
-        return None
-    versions = [int(n[1:]) for n in names if _re.fullmatch(r"v\d+", n)]
-    return max(versions) if versions else None
-
-
 def _applied_batch_of(table_path: str, version: int) -> int:
     """The highest stream batch_id folded into committed ``v<version>``
     (the ``_APPLIED_BATCH`` marker — a ``_``-prefixed file, invisible to
@@ -728,9 +694,8 @@ def _applied_batch_of(table_path: str, version: int) -> int:
         return version - 1
 
 
-def _write_applied_marker(staging: str, applied_batch: int) -> None:
-    with open(os.path.join(staging, "_APPLIED_BATCH"), "w") as fh:
-        fh.write(str(int(applied_batch)))
+def _applied_marker(applied_batch: int) -> tuple[str, str]:
+    return "_APPLIED_BATCH", str(int(applied_batch))
 
 
 def init_cdc_table(snapshot: DataFrame, table_path: str) -> None:
@@ -741,21 +706,18 @@ def init_cdc_table(snapshot: DataFrame, table_path: str) -> None:
     :func:`vacuum_cdc_table` can interleave without desynchronizing the
     replay-skip check). Initial rows get sequence −1 — every real change
     (sequences must be ≥ 0) supersedes them."""
-    os.makedirs(table_path, exist_ok=True)
-    staging = os.path.join(table_path, "_tmp_v0")
-    snapshot.select(
+    state = snapshot.select(
         "*",
         F.lit(-1).cast("long").alias("__seq"),
         F.lit(False).alias("__deleted"),
-    ).write.mode("overwrite").parquet(staging)
-    _write_applied_marker(staging, -1)
-    os.rename(staging, os.path.join(table_path, "v0"))
+    )
+    commit_version(table_path, 0, state, marker=_applied_marker(-1))
 
 
 def read_cdc_table(spark: SparkSession, table_path: str) -> DataFrame:
     """Read the latest committed state of a CDC-maintained table (live
     rows only — tombstones and the sequence watermark are internal)."""
-    latest = _latest_cdc_version(table_path)
+    latest = latest_version(table_path)
     if latest is None:
         raise FileNotFoundError(f"no committed CDC table under {table_path}")
     df = spark.read.parquet(os.path.join(table_path, f"v{latest}"))
@@ -781,10 +743,10 @@ def stream_apply_changes(
     MERGE loop (``notebooks/utils.py:1748-1758``), with two guarantees
     that loop does not have:
 
-    - **Exactly-once under crash**: each post-batch state commits as an
-      atomic ``v<batch_id+1>`` rename (the CMS commit protocol —
-      :func:`_merge_cms_batch`); a batch replayed after a crash between
-      the state commit and the checkpoint commit SKIPS instead of
+    - **Exactly-once under crash**: each post-batch state commits as the
+      next ``v<N>`` carrying its ``_APPLIED_BATCH`` marker (README
+      "Commit protocol"); a batch replayed after a crash between the
+      state commit and the checkpoint commit SKIPS instead of
       re-applying.
     - **Out-of-order safety ACROSS batches**: every stored row carries
       its winning ``__seq``; per batch, stored rows and the batch's
@@ -810,8 +772,6 @@ def stream_apply_changes(
     table with :func:`read_cdc_table`. Returns the StreamingQuery
     (availableNow — drains the backlog and stops).
     """
-    import shutil
-
     keys = list(keys)
     stream = spark.readStream.schema(schema).json(input_path)
     payload = [
@@ -820,7 +780,7 @@ def stream_apply_changes(
     ]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest_cdc_version(table_path)
+        latest = latest_version(table_path)
         if latest is not None and _applied_batch_of(table_path, latest) >= batch_id:
             return  # replay after a post-commit crash: already applied
         if batch_df.isEmpty():
@@ -887,16 +847,10 @@ def stream_apply_changes(
             F.col("__w.__seq").alias("__seq"),
             (F.col("__w.__op") == F.lit(delete_op)).alias("__deleted"),
         )
-        os.makedirs(table_path, exist_ok=True)
-        next_version = (latest if latest is not None else -1) + 1
-        staging = os.path.join(table_path, f"_tmp_v{next_version}")
-        new_state.write.mode("overwrite").parquet(staging)
-        _write_applied_marker(staging, batch_id)
-        os.rename(staging, os.path.join(table_path, f"v{next_version}"))
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(table_path, f"v{latest}"), ignore_errors=True
-            )
+        commit_version(
+            table_path, (latest if latest is not None else -1) + 1, new_state,
+            marker=_applied_marker(batch_id),
+        )
         if after_commit_hook is not None:
             after_commit_hook(batch_id)
 
@@ -918,16 +872,11 @@ def vacuum_cdc_table(spark: SparkSession, table_path: str, horizon_seq: int) -> 
     guarding against reorderable stale updates. Returns the number of
     tombstones removed.
 
-    The vacuum commits exactly like a batch: the compacted state lands as
-    the next ``v<N+1>`` directory via one atomic rename (carrying the
-    previous version's applied-batch marker forward, so the stream's
-    replay-skip check is untouched by interleaved maintenance commits) —
-    readers never observe a partial vacuum and a crash mid-vacuum leaves
-    the previous version intact.
+    The vacuum commits exactly like a batch, as the next ``v<N>``, carrying
+    the previous version's applied-batch marker forward so the stream's
+    replay-skip check is untouched by interleaved maintenance commits.
     """
-    import shutil
-
-    latest = _latest_cdc_version(table_path)
+    latest = latest_version(table_path)
     if latest is None:
         raise FileNotFoundError(f"no committed CDC table under {table_path}")
     cur = spark.read.parquet(os.path.join(table_path, f"v{latest}"))
@@ -935,19 +884,17 @@ def vacuum_cdc_table(spark: SparkSession, table_path: str, horizon_seq: int) -> 
     n_dead = cur.filter(dead).count()
     if n_dead == 0:
         return 0
-    applied = _applied_batch_of(table_path, latest)
-    staging = os.path.join(table_path, f"_tmp_v{latest + 1}")
-    cur.filter(~dead).write.mode("overwrite").parquet(staging)
-    _write_applied_marker(staging, applied)
-    os.rename(staging, os.path.join(table_path, f"v{latest + 1}"))
-    shutil.rmtree(os.path.join(table_path, f"v{latest}"), ignore_errors=True)
+    commit_version(
+        table_path, latest + 1, cur.filter(~dead),
+        marker=_applied_marker(_applied_batch_of(table_path, latest)),
+    )
     return n_dead
 
 
 def read_trailing_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Latest committed per-(keys, bucket) moment state maintained by
     :func:`stream_trailing_state` (highest ``v<batch_id>`` dir)."""
-    latest = _latest_cms_version(state_path)
+    latest = latest_version(state_path)
     if latest is None:
         raise FileNotFoundError(f"no committed trailing state under {state_path}")
     return spark.read.parquet(os.path.join(state_path, f"v{latest}"))
@@ -982,17 +929,14 @@ def stream_trailing_state(
     ``trailing_window_features`` recompute over raw events (the
     ``q_stream_trailing_features`` oracle proves exactly this).
 
-    Exactly-once under crash: same versioned commit protocol as
-    :func:`stream_count_min` — the merged state lands in ``v<batch_id>``
-    by one atomic rename and replayed batch ids at/below the committed
-    version are skipped, so a crash between state commit and checkpoint
+    Exactly-once under crash: same ``v<batch_id>`` commit as
+    :func:`stream_count_min` (README "Commit protocol") — replayed batch
+    ids at/below the committed version are skipped, so a crash between state commit and checkpoint
     commit cannot double-merge. State size is O(keys × active buckets);
     at real scale the state table is partitioned by bucket so the
     rewrite touches only buckets present in the batch. availableNow —
     drains the backlog and stops; returns the StreamingQuery.
     """
-    import shutil
-
     from databricks_demo_feature_store_spark.featurestore.incremental import (
         aggregate_state,
         merge_aggregate_state,
@@ -1009,7 +953,7 @@ def stream_trailing_state(
         h_lo, h_hi, h_n = float(hist[0]), float(hist[1]), int(hist[2])
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest_cms_version(state_path)
+        latest = latest_version(state_path)
         if latest is not None and latest >= batch_id:
             return  # replay after a post-commit crash: already merged
         if batch_df.isEmpty():
@@ -1046,14 +990,7 @@ def stream_trailing_state(
                         ],
                     )
                 )
-        os.makedirs(state_path, exist_ok=True)
-        staging = os.path.join(state_path, f"_tmp_v{batch_id}")
-        state.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(state_path, f"v{batch_id}"))
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(state_path, f"v{latest}"), ignore_errors=True
-            )
+        commit_version(state_path, batch_id, state)
         if after_commit_hook is not None:
             after_commit_hook(batch_id)
 
@@ -1271,17 +1208,6 @@ def watermark_progress_metrics(query) -> list[dict]:
 _CDF_VIEW_MARKER = "_source_version.json"
 
 
-def _latest_cdf_view_version(view_path: str) -> int | None:
-    if not os.path.isdir(view_path):
-        return None
-    versions = [
-        int(n[1:])
-        for n in os.listdir(view_path)
-        if n.startswith("v") and n[1:].isdigit()
-    ]
-    return max(versions) if versions else None
-
-
 def _cdf_view_source_version(view_path: str, view_version: int) -> int:
     import json
 
@@ -1292,35 +1218,28 @@ def _cdf_view_source_version(view_path: str, view_version: int) -> int:
 
 
 def _commit_cdf_view(df: DataFrame, view_path: str, source_version: int) -> None:
-    """Atomic versioned commit of the view state (the CMS/CDC commit
-    protocol): staging dir carries the source-version marker, one rename
-    publishes both, the previous version is dropped after."""
+    """Commit the view state as the next ``v<N>`` carrying its
+    source-version marker (README "Commit protocol")."""
     import json
-    import shutil
 
-    latest = _latest_cdf_view_version(view_path)
-    next_version = (latest if latest is not None else -1) + 1
-    os.makedirs(view_path, exist_ok=True)
-    staging = os.path.join(view_path, f"_tmp_v{next_version}")
-    df.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, _CDF_VIEW_MARKER), "w") as fh:
-        json.dump({"source_version": int(source_version)}, fh)
-    os.rename(staging, os.path.join(view_path, f"v{next_version}"))
-    if latest is not None:
-        shutil.rmtree(os.path.join(view_path, f"v{latest}"), ignore_errors=True)
+    latest = latest_version(view_path)
+    commit_version(
+        view_path, (latest if latest is not None else -1) + 1, df,
+        marker=(_CDF_VIEW_MARKER, json.dumps({"source_version": int(source_version)})),
+    )
 
 
 def init_cdf_view(view_df: DataFrame, view_path: str, source_version: int) -> None:
     """Bootstrap the materialized view: the FULL join computed at
     ``source_version`` of the fact table. The stream then folds only
     commits newer than this version."""
-    if _latest_cdf_view_version(view_path) is not None:
+    if latest_version(view_path) is not None:
         raise FileExistsError(f"CDF view already initialized at {view_path}")
     _commit_cdf_view(view_df, view_path, source_version)
 
 
 def read_cdf_view(spark: SparkSession, view_path: str) -> DataFrame:
-    latest = _latest_cdf_view_version(view_path)
+    latest = latest_version(view_path)
     if latest is None:
         raise FileNotFoundError(f"no CDF view at {view_path}")
     return spark.read.parquet(os.path.join(view_path, f"v{latest}"))
@@ -1380,7 +1299,7 @@ def stream_cdf_ivm(
         ]
         if not markers:
             return
-        latest_view = _latest_cdf_view_version(view_path)
+        latest_view = latest_version(view_path)
         if latest_view is None:
             raise FileNotFoundError(
                 f"CDF view at {view_path} not initialized — call "
@@ -1458,7 +1377,7 @@ def stream_cdf_agg_ivm(
         ]
         if not markers:
             return
-        latest_state = _latest_cdf_view_version(state_path)
+        latest_state = latest_version(state_path)
         if latest_state is None:
             raise FileNotFoundError(
                 f"CDF aggregate state at {state_path} not initialized — "

@@ -620,7 +620,8 @@ def test_concurrent_staged_swap_raises_no_lost_update(spark, tmp_path, monkeypat
 
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "c")}  # B intact, A not applied
-    assert not os.path.exists(path + "__staging")  # loser's staging discarded
+    # loser's staging (<path>__staging-<uuid8>) discarded
+    assert [d for d in os.listdir(tmp_path) if "__staging" in d] == []
 
     # A retried against the new state commits cleanly
     monkeypatch.setattr(writers, "_read_folding_dv", real_read)

@@ -696,7 +696,8 @@ def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch):
     """ADVICE r11: registry metadata must ride in the staging directory so
     the _swap_dirs rename promotes data + primary_keys atomically. A crash
     AT the swap must leave the live table (and its metadata) untouched,
-    and the staging dir must already contain the metadata file."""
+    and the staging dir must already contain the metadata file when the
+    swap is called."""
     import os
 
     from databricks_demo_feature_store_spark.featurestore import forget_entities
@@ -717,6 +718,9 @@ def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch):
 
     def crash_swap(live, staging, expected_generation=None):
         staged["path"] = staging.removeprefix("file:")
+        staged["has_meta"] = os.path.exists(
+            os.path.join(staged["path"], METADATA_FILE)
+        )
         raise RuntimeError("simulated crash at swap")
 
     monkeypatch.setattr(writers, "_swap_dirs", crash_swap)
@@ -724,9 +728,10 @@ def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch):
 
     with _pytest.raises(RuntimeError, match="simulated crash"):
         forget_entities(mgr, forget, "uid")
-    # staging already carries the registry metadata — the rename alone
-    # would have promoted both
-    assert os.path.exists(os.path.join(staged["path"], METADATA_FILE))
+    # staging already carried the registry metadata — the rename alone
+    # would have promoted both; the failed rewrite then removed staging
+    assert staged["has_meta"]
+    assert not os.path.exists(staged["path"])
     # live table + metadata untouched by the crash
     assert mgr.read("ta").count() == 2
     assert mgr.get_metadata("ta")["primary_keys"] == ["uid"]

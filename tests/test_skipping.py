@@ -385,8 +385,12 @@ def test_sidecar_rewrite_leaves_no_debris(spark, tmp_path):
     _write_clustered(spark, path)
     write_stats_sidecar(spark, path, ["id"])
     write_stats_sidecar(spark, path, ["id"])  # rewrite over an existing sidecar
+    # the sidecar is swapped as <path>/_stats/data: look in the whole tree
     leftovers = [
-        d for d in os.listdir(path) if ".staging-" in d or d.endswith("__old")
+        d
+        for _root, dirs, _files in os.walk(path)
+        for d in dirs
+        if "__staging-" in d or d.endswith("__old")
     ]
     assert leftovers == []
     assert load_file_stats(spark, path).count() > 0

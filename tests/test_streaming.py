@@ -766,11 +766,11 @@ def test_cdc_vacuum_tombstones_and_marker(spark, tmp_path):
     def raw(path):
         import os as _os
 
-        from databricks_demo_feature_store_spark.streaming.ops import (
-            _latest_cdc_version,
+        from databricks_demo_feature_store_spark.sources.writers import (
+            latest_version,
         )
 
-        v = _latest_cdc_version(path)
+        v = latest_version(path)
         return spark.read.parquet(_os.path.join(path, f"v{v}"))
 
     # batch 0: delete k=1 (seq 10), delete k=2 (seq 50)

@@ -17,7 +17,11 @@ JVM/session and one step's config can't mask another's failure):
    only persists the standing-record map at sf0.1).
 5. ``tools/compat35_audit.py`` — the PySpark-3.5 surface ratchet
    (functions + object methods); fails on any unratcheted usage.
-6. Round-artifact hygiene — fails on untracked or modified
+6. Slow tests guarding commit code — when the working tree changes
+   ``sources/writers.py``, ``sources/versioned.py``, ``streaming/ops.py``
+   or ``featurestore/``, runs :data:`COMMIT_SLOW_TESTS` with ``-m slow``
+   (they are deselected by default); fails unless every one passes.
+7. Round-artifact hygiene — fails on untracked or modified
    ``BENCH_r*.json`` / ``CORRECTNESS_r*.json`` / ``BENCH_FULL.json`` /
    ``BENCH_SWEEP.json`` (VERDICT r11/r12/r13 all flagged the same
    drift: an auditor cloning the repo at any commit must see the
@@ -40,6 +44,26 @@ import sys
 REPO = "/root/repo"
 PY = sys.executable
 
+PKG = "databricks_demo_feature_store_spark/"
+COMMIT_CODE = (
+    PKG + "sources/writers.py",
+    PKG + "sources/versioned.py",
+    PKG + "streaming/ops.py",
+    PKG + "featurestore/",
+)
+# tests/conftest.py SLOW_TESTS members that exercise the commit protocol
+COMMIT_SLOW_TESTS = (
+    "test_ingest_crash_recovery_exactly_once",
+    "test_concurrent_staged_swap_raises_no_lost_update",
+    "test_forget_entities_propagates_and_is_idempotent",
+    "test_restore_promotes_old_version_preserving_history",
+    "test_index_upsert_stream_crash_replay_converges",
+    "test_stream_cdf_agg_ivm_matches_batch_and_recompute",
+    "test_apply_changes_matches_dict_replay",
+    "test_incremental_stats_refresh_equals_rebuild",
+    "test_incremental_bloom_refresh_equals_rebuild",
+)
+
 
 def run(
     name: str, argv: list[str], cwd: str = REPO, env: dict[str, str] | None = None
@@ -49,6 +73,31 @@ def run(
     proc = subprocess.run(argv, cwd=cwd, capture_output=True, text=True, env=full_env)
     out = proc.stdout + proc.stderr
     return proc.returncode == 0, out
+
+
+def commit_slow_tests() -> bool:
+    """Run :data:`COMMIT_SLOW_TESTS` when uncommitted changes touch
+    :data:`COMMIT_CODE`; True when skipped or when every one passed."""
+    print("== commit-code slow tests ==", flush=True)
+    changed = subprocess.run(
+        ["git", "status", "--porcelain", "--untracked-files=all", "--", *COMMIT_CODE],
+        cwd=REPO, capture_output=True, text=True,
+    ).stdout.strip()
+    if not changed:
+        print("skipped (commit code unchanged)")
+        return True
+    ok, out = run(
+        "pytest -m slow (commit code)",
+        [PY, "-m", "pytest", "tests/", "-q", "-p", "no:cacheprovider",
+         "-m", "slow", "-k", " or ".join(COMMIT_SLOW_TESTS)],
+    )
+    m = re.search(r"(\d+) passed", out)
+    passed = int(m.group(1)) if m else 0
+    print(out.strip().splitlines()[-1] if out.strip() else "(no output)")
+    if not ok or passed < len(COMMIT_SLOW_TESTS):
+        print(out[-3000:])
+        return False
+    return True
 
 
 def main() -> int:
@@ -127,6 +176,9 @@ def main() -> int:
     print(last)
     if not ok:
         failures.append("compat35")
+
+    if not fast and not commit_slow_tests():
+        failures.append("commit-slow-tests")
 
     # round-artifact hygiene: the per-round evidence files must be
     # committed, not drifting in the working tree (recurring verdict item
