@@ -302,16 +302,17 @@ def refresh_join_view_from_cdf(
     recompute of the join on the post-commit table is proven by the
     driver gate (``q_incr_cdf_refresh``), not assumed.
     """
-    versions = sorted(v.version for v in versioned.history())
-    if v_to is None:
-        if not versions:
-            raise ValueError("versioned table has no commits")
-        v_to = versions[-1]
-    if v_from is None:
-        older = [v for v in versions if v < v_to]
-        if not older:
-            raise ValueError(f"no version before {v_to} to diff against")
-        v_from = older[-1]
+    if v_to is None or v_from is None:
+        versions = sorted(v.version for v in versioned.history())
+        if v_to is None:
+            if not versions:
+                raise ValueError("versioned table has no commits")
+            v_to = versions[-1]
+        if v_from is None:
+            older = [v for v in versions if v < v_to]
+            if not older:
+                raise ValueError(f"no version before {v_to} to diff against")
+            v_from = older[-1]
     # Pin the change feed before splitting it: cdf_deltas fans `changes`
     # out to THREE plan consumers (delta→touched, deletes→touched,
     # delta→re-join), and without materialization each consumer re-runs

@@ -216,11 +216,7 @@ class FeatureStoreManager:
                 enforce_check_constraints,
             )
 
-            # pin the plan first (the writers.save_table discipline): a
-            # non-deterministic frame must not pass validation on one
-            # evaluation and write a different one
-            df = df.localCheckpoint(eager=True)
-            enforce_check_constraints(df, spec.check_constraints)
+            df = enforce_check_constraints(df, spec.check_constraints)
         diff = self.validate_schema(spec.name, df)
         path = self.path(spec.name)
 

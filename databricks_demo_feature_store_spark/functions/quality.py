@@ -7,8 +7,6 @@ Parity targets in the reference:
   (``"all"`` keyword means all columns)
 - ``impute_dataframe`` — ``src/packages/preprocessing/transformers/transform_column.py:90-129``
 - ``rename_columns`` — ``transform_column.py:58-87``
-- duplicate-column dedup — ``src/packages/preprocessing/clean/clean_data.py:8-36``
-  (the reference does a pandas transpose; ours is a pure projection)
 """
 
 from __future__ import annotations
@@ -68,18 +66,6 @@ def rename_columns(df: DataFrame, renames: Mapping[str, str]) -> DataFrame:
     if missing:
         raise ValueError(f"Cannot rename missing columns: {missing}")
     return df.withColumnsRenamed(dict(renames))
-
-
-def drop_duplicate_columns(df: DataFrame) -> DataFrame:
-    """Keep the first occurrence of each column name — ``clean_data.py:8-36``
-    re-expressed as a projection (no pandas transpose)."""
-    seen: dict[str, int] = {}
-    cols = []
-    for i, c in enumerate(df.columns):
-        if c not in seen:
-            seen[c] = i
-            cols.append(df[i])
-    return df.select(*cols) if len(cols) != len(df.columns) else df
 
 
 def prefix_columns(

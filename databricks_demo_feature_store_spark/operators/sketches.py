@@ -378,9 +378,18 @@ def cms_estimate(
     multiplicity (duplicate key values produce duplicate rows — the old
     form collapsed them via its re-aggregation; every engine caller
     passes distinct/grouped keys, where the two are identical).
+
+    Raises ``ValueError`` when ``keys`` already has a ``cms_count``
+    column (the output would carry two).
     """
     from databricks_demo_feature_store_spark.textops.dedup import portable_hash_col
 
+    if "cms_count" in keys.columns:
+        raise ValueError("cms_estimate: keys already has a 'cms_count' column")
+    # the broadcast map column must not shadow any caller column
+    cells = "__cells"
+    while cells in keys.columns:
+        cells = "_" + cells
     width = int(width)
     cell_map = sketch.groupBy().agg(
         F.map_from_entries(
@@ -392,12 +401,12 @@ def cms_estimate(
                     F.col("n").alias("v"),
                 )
             )
-        ).alias("__cells")
+        ).alias(cells)
     )
     probes = [
         F.coalesce(
             F.element_at(
-                F.col("__cells"),
+                F.col(cells),
                 (
                     F.lit(i * width)
                     + F.pmod(

@@ -152,5 +152,5 @@ def materialize_mapping(spark: SparkSession, table_path: str) -> int:
         base = _read_folding_dv(spark, table_path, "parquet")
         base.select(
             *[F.col(c).alias(mapping.get(c, c)) for c in base.columns]
-        ).localCheckpoint(eager=True).write.mode("overwrite").parquet(staging)
+        ).write.mode("overwrite").parquet(staging)
     return len(mapping)

@@ -57,8 +57,8 @@ def delete_rows(spark: SparkSession, table_path: str, predicate: str) -> int:
     if os.path.isdir(out):
         existing = spark.read.parquet(out)
         hits = hits.join(existing, on=["__file", "__row"], how="left_anti")
-    # localCheckpoint: the append below writes INTO the directory the
-    # anti-join's plan reads — materialize first
+    # the append below is not staged and writes INTO the directory the
+    # anti-join's plan reads
     hits = hits.localCheckpoint(eager=True)
     n_new = hits.count()
     if n_new:
@@ -133,7 +133,5 @@ def apply_deletes(spark: SparkSession, table_path: str) -> int:
     if not dv_count:
         return 0
     with staged_rewrite(table_path) as staging:
-        read_with_deletes(spark, table_path).localCheckpoint(eager=True).write.mode(
-            "overwrite"
-        ).parquet(staging)
+        read_with_deletes(spark, table_path).write.mode("overwrite").parquet(staging)
     return dv_count

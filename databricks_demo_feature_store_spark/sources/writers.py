@@ -60,14 +60,19 @@ class CheckConstraintViolation(ValueError):
         )
 
 
-def enforce_check_constraints(df: DataFrame, constraints: Sequence[str]) -> None:
+def enforce_check_constraints(df: DataFrame, constraints: Sequence[str]) -> DataFrame:
     """Validate every constraint in ONE aggregation job (conditional
     counts — map-side combinable); raise :class:`CheckConstraintViolation`
     with the per-constraint violation counts if any row fails. NULL
     results PASS (SQL CHECK semantics), so ``x > 0`` does not reject
-    NULL x — add ``x IS NOT NULL`` explicitly for that."""
+    NULL x — add ``x IS NOT NULL`` explicitly for that.
+
+    Returns the pinned frame that was validated: write THAT frame, so a
+    non-deterministic plan cannot pass on one evaluation and write
+    another (and the write does not pay a second computation)."""
     from pyspark.sql import functions as F
 
+    df = df.localCheckpoint(eager=True)
     constraints = list(constraints)
     aggs = [
         F.sum(
@@ -83,6 +88,7 @@ def enforce_check_constraints(df: DataFrame, constraints: Sequence[str]) -> None
     }
     if counts:
         raise CheckConstraintViolation(counts)
+    return df
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -349,11 +355,7 @@ def save_table(
         if extra_checks:
             check_constraints = list(check_constraints or []) + extra_checks
     if check_constraints:
-        # pin the plan FIRST: validating one evaluation and writing a
-        # re-evaluation would un-guarantee 'no half-poisoned table' for
-        # non-deterministic plans (and pays a second full computation)
-        df = df.localCheckpoint(eager=True)
-        enforce_check_constraints(df, check_constraints)
+        df = enforce_check_constraints(df, check_constraints)
     if mode == "merge":
         if not merge_keys:
             raise ValueError("merge mode requires merge_keys")

@@ -1284,8 +1284,7 @@ def stream_cdf_ivm(
     the span diff loses its base snapshot.
     """
     from databricks_demo_feature_store_spark.featurestore.incremental import (
-        cdf_deltas,
-        refresh_join_view,
+        refresh_join_view_from_cdf,
     )
 
     stream = spark.readStream.schema(
@@ -1309,23 +1308,11 @@ def stream_cdf_ivm(
         v_max = max(markers)
         if v_max <= applied:
             return  # replay after post-commit crash, or bootstrap marker
-        sess = batch_df.sparkSession
-        # pin the span diff once: cdf_deltas fans it out to three plan
-        # consumers, each of which would re-run the full-outer version
-        # join (see refresh_join_view_from_cdf); the feed is delta-sized.
-        # Reliability trade (ADVICE r14): localCheckpoint truncates
-        # lineage into executor-local blocks, so on executor loss the
-        # batch cannot be recomputed and the stream fails — fine for
-        # local/demo scale; a long-running cluster stream should prefer
-        # reliable checkpointing or recompute (set
-        # SPARK_GRAFT_CDF_PIN=0 to opt out).
-        changes = versioned.changes_between(applied, v_max, [key])
-        if os.environ.get("SPARK_GRAFT_CDF_PIN", "1") != "0":
-            changes = changes.localCheckpoint(eager=True)
-        delta, deletes = cdf_deltas(changes, key)
-        view = sess.read.parquet(os.path.join(view_path, f"v{latest_view}"))
-        refreshed = refresh_join_view(
-            view, delta, other, on=on, replace_key=key, deletes=deletes
+        view = batch_df.sparkSession.read.parquet(
+            os.path.join(view_path, f"v{latest_view}")
+        )
+        refreshed = refresh_join_view_from_cdf(
+            view, versioned, key, other, on, v_from=applied, v_to=v_max
         )
         _commit_cdf_view(refreshed, view_path, v_max)
 

@@ -293,9 +293,6 @@ def winnowing_fingerprints(
 # ---------------------------------------------------------------------------
 
 
-_NGRAM_PERSIST_SLOT: list = []
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -303,7 +300,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | str | None = None,
-    persist_normalized: bool = True,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via a shingle inverted index.
 
@@ -330,12 +326,10 @@ def ngram_jaccard_pairs(
     bundled ``q_ext_ngram_jaccard_cutoff`` coverage query runs the auto
     path and is differentially checked against the exact oracle.
 
-    ``persist_normalized`` caches the (id, sorted-hashes, n) normalization:
-    the plan consumes it three times (prefix index + both verification
-    sides) and the md5 shingle hashing dominates cost — at cluster scale
-    write it to a table once instead. Repeated invocations in one session
-    (bench loops) don't leak: the previous call's cache is unpersisted
-    before a new one is pinned.
+    The (id, sorted-hashes, n) normalization is pinned: the plan consumes
+    it three times (prefix index + both verification sides) and the md5
+    shingle hashing dominates cost — at cluster scale write it to a table
+    once instead.
     """
     # Work on sorted 60-bit shingle hashes: one md5 pass per doc, and all
     # downstream set algebra (prefix, intersect) runs on longs, not strings.
@@ -344,14 +338,10 @@ def ngram_jaccard_pairs(
         with_shingle_hashes(df, text_col, k, "__hs")
         .select(F.col(id_col).alias("id"), F.array_sort("__hs").alias("hs"))
         .withColumn("n", F.size("hs"))
+        .localCheckpoint(eager=False)
     )
-    if persist_normalized:
-        while _NGRAM_PERSIST_SLOT:
-            _NGRAM_PERSIST_SLOT.pop().unpersist()
-        hashed = hashed.persist()
-        _NGRAM_PERSIST_SLOT.append(hashed)
     if max_shingle_df == "auto":
-        # One scalar action over the (persisted) normalization; at cluster
+        # One scalar action over the (pinned) normalization; at cluster
         # scale read n_docs from table stats instead.
         n_docs = hashed.count()
         max_shingle_df = max(50, 2 * math.isqrt(max(n_docs, 1)))
@@ -427,9 +417,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-_BUCKET_PERSIST_SLOT: list = []
-
-
 def _capped_bucket_pairs(
     blocked: DataFrame,
     key_cols: list[str],
@@ -475,11 +462,9 @@ def _capped_bucket_pairs(
 
     The blocked frame feeds several plan branches on every path (at
     minimum the two self-join sides; with a cap also bucket counts, the
-    lazy cap aggregate, cold clique, hot grouping) — it is pinned with
-    ``persist`` for the call (same pattern and slot discipline as
-    ``ngram_jaccard_pairs``' normalization cache) so the upstream sketch
-    computation runs once, not once per branch; at cluster scale write
-    the blocked frame to a table instead.
+    lazy cap aggregate, cold clique, hot grouping) — it is pinned so the
+    upstream sketch computation runs once, not once per branch; at
+    cluster scale write the blocked frame to a table instead.
     """
 
     def _emit(pa: Column, pb: Column) -> list[Column]:
@@ -488,7 +473,7 @@ def _capped_bucket_pairs(
         )
 
     # EVERY path self-joins blocked, so pin it for the call — and pin it
-    # HASH-PARTITIONED BY THE BUCKET KEY: the persisted frame's
+    # HASH-PARTITIONED BY THE BUCKET KEY: the pinned frame's
     # HashPartitioning(key_cols) satisfies the clustering requirement of
     # every downstream consumer (the bucket-count aggregate, both
     # self-join sides, the hot-branch groupBy whose keys are a superset),
@@ -498,10 +483,7 @@ def _capped_bucket_pairs(
     # query replayed 64-bit hashing per side on one scan task — 72 s →
     # ~2 s — and the capped MinHash path serialized every extra pass
     # through a single cached partition, 1.4 s → 6.5 s → back).
-    while _BUCKET_PERSIST_SLOT:
-        _BUCKET_PERSIST_SLOT.pop().unpersist()
-    blocked = blocked.repartition(*key_cols).persist()
-    _BUCKET_PERSIST_SLOT.append(blocked)
+    blocked = blocked.repartition(*key_cols).localCheckpoint(eager=False)
     a, b = blocked.alias("a"), blocked.alias("b")
 
     def _plain_cliques() -> DataFrame:

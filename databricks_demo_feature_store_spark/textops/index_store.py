@@ -302,12 +302,6 @@ class VectorIndexStore:
         )
         if self.partition_postings:
             tombs = tombs.withColumn(self.PART_COL, self._part_col())
-        tombs = (
-            tombs
-            # materialize BEFORE the merge rewrites the postings files
-            # this plan reads (self-referencing upsert)
-            .localCheckpoint(eager=True)
-        )
         self.manager.save(
             tombs, self._postings_spec(), mode="merge",
             policy=EvolutionPolicy.FAIL,
@@ -362,8 +356,7 @@ class VectorIndexStore:
         all_rows = self.manager.read(self.postings_table)
         dead = all_rows.filter(F.col("deleted")).count()
         if dead:
-            # localCheckpoint BEFORE overwriting the files the plan reads
-            live = all_rows.filter(~F.col("deleted")).localCheckpoint(eager=True)
+            live = all_rows.filter(~F.col("deleted"))
             self.manager.save(live, self._postings_spec(), mode="overwrite")
         return dead
 
@@ -486,7 +479,8 @@ class VectorIndexStore:
             corpus = self.manager.read(self.vectors_table).join(
                 live_ids, on=self.id_col
             )
-        # materialize BEFORE build() overwrites the tables this plan reads
+        # build() swaps the postings and vectors tables this plan reads
+        # while its overlapped sibling save may still be reading them
         corpus = corpus.localCheckpoint(eager=True)
         self.build(
             corpus,

@@ -559,10 +559,9 @@ def semantic_dedup(
     cents = ivf_centroids(df, nlist, id_col, vec_col, kmeans_iterations)
     assigned = ivf_assign(df, cents, id_col, vec_col)
     # The assignment feeds BOTH pair sides and the anti-join base; without
-    # materialization the whole Lloyd chain recomputes 3x. localCheckpoint
-    # truncates the iteration lineage too (same discipline as
-    # dedup_clusters); at cluster scale persist partitioned by `cluster`
-    # instead so the pair join is partition-local.
+    # the pin the whole Lloyd chain recomputes 3x. At cluster scale write
+    # it partitioned by `cluster` instead so the pair join is
+    # partition-local.
     assigned = assigned.localCheckpoint(eager=False)
 
     if strategy == "arrow":

@@ -249,6 +249,16 @@ def test_check_constraints_enforced_before_write(spark, tmp_path):
     # the write never started: table unchanged
     assert spark.read.parquet(path).count() == 2
 
+    # a violating overwrite computed FROM the table itself: still raises
+    # on the validated (pinned) frame, and the live files survive
+    flipped = spark.read.parquet(path).withColumn("bal", -F.col("bal"))
+    with _pytest.raises(CheckConstraintViolation) as exc:
+        save_table(flipped, path, check_constraints=["bal > 0"])
+    assert exc.value.counts == {"bal > 0": 1}
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == [
+        (1, 5.0), (2, None)
+    ]
+
 
 def test_compaction_policy_thresholds_and_zorder(spark, tmp_path):
     """maybe_compact: below-threshold no-op, triggered rewrite reduces the

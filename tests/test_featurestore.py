@@ -862,6 +862,15 @@ def test_spec_check_constraints_enforced_every_save(spark, manager):
     got = manager.read("checked_features").collect()
     assert len(got) == 1 and got[0].f1 == 1.0
 
+    # overwrite path, with a frame read from the table itself: rejects,
+    # table and registry unchanged
+    flipped = manager.read("checked_features").withColumn("f1", -F.col("f1") - 1)
+    with pytest.raises(CheckConstraintViolation):
+        manager.save(flipped, spec, mode="overwrite")
+    got = manager.read("checked_features").collect()
+    assert len(got) == 1 and got[0].f1 == 1.0
+    assert manager.get_metadata("checked_features")["check_constraints"] == ["f1 >= 0"]
+
     # passing merge lands
     manager.save(_df(spark, [(2, dt.date(2024, 1, 1), 2.0)]), spec, mode="merge")
     assert manager.read("checked_features").count() == 2

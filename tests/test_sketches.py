@@ -274,3 +274,34 @@ def test_cms_estimate_map_lookup_matches_cell_replay(spark):
     # duplicate key rows stay duplicated (documented contract change)
     dup = spark.createDataFrame([("a",), ("a",)], "k string")
     assert cms_estimate(sk, dup, "k", depth=depth, width=width).count() == 2
+
+
+def test_cms_estimate_keys_with_internal_column_names(spark):
+    """A ``keys`` frame carrying a ``__cells`` column keeps it and still
+    gets correct estimates; one already carrying ``cms_count`` is refused
+    by name instead of producing two ``cms_count`` columns."""
+    import pytest as _p
+
+    from databricks_demo_feature_store_spark.operators.sketches import (
+        cms_estimate,
+        count_min_sketch,
+    )
+
+    df = spark.createDataFrame([(k,) for k in "aabbbc"], "k string")
+    sk = count_min_sketch(df, "k")
+    plain = spark.createDataFrame([("a",), ("b",), ("z",)], "k string")
+    want = {r.k: r.cms_count for r in cms_estimate(sk, plain, "k").collect()}
+    assert want == {"a": 2, "b": 3, "z": 0}
+
+    shadow = spark.createDataFrame(
+        [("a", 1), ("b", 2), ("z", 3)], "k string, __cells int"
+    )
+    out = cms_estimate(sk, shadow, "k")
+    assert out.columns == ["k", "__cells", "cms_count"]
+    assert {(r.k, r["__cells"], r.cms_count) for r in out.collect()} == {
+        ("a", 1, 2), ("b", 2, 3), ("z", 3, 0)
+    }
+
+    taken = spark.createDataFrame([("a", 9)], "k string, cms_count long")
+    with _p.raises(ValueError, match="cms_count"):
+        cms_estimate(sk, taken, "k")

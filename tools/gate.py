@@ -17,10 +17,11 @@ JVM/session and one step's config can't mask another's failure):
    only persists the standing-record map at sf0.1).
 5. ``tools/compat35_audit.py`` — the PySpark-3.5 surface ratchet
    (functions + object methods); fails on any unratcheted usage.
-6. Slow tests guarding commit code — when the working tree changes
-   ``sources/writers.py``, ``sources/versioned.py``, ``streaming/ops.py``
-   or ``featurestore/``, runs :data:`COMMIT_SLOW_TESTS` with ``-m slow``
-   (they are deselected by default); fails unless every one passes.
+6. Slow tests guarding changed code — for every path prefix in
+   :data:`SLOW_TESTS_BY_CODE` with uncommitted changes (the commit
+   code, ``textops/dedup.py``, ``textops/index_store.py``), runs its
+   slow tests with ``-m slow`` (they are deselected by default); fails
+   unless every one passes.
 7. Round-artifact hygiene — fails on untracked or modified
    ``BENCH_r*.json`` / ``CORRECTNESS_r*.json`` / ``BENCH_FULL.json`` /
    ``BENCH_SWEEP.json`` (VERDICT r11/r12/r13 all flagged the same
@@ -45,14 +46,8 @@ REPO = "/root/repo"
 PY = sys.executable
 
 PKG = "databricks_demo_feature_store_spark/"
-COMMIT_CODE = (
-    PKG + "sources/writers.py",
-    PKG + "sources/versioned.py",
-    PKG + "streaming/ops.py",
-    PKG + "featurestore/",
-)
 # tests/conftest.py SLOW_TESTS members that exercise the commit protocol
-COMMIT_SLOW_TESTS = (
+_COMMIT_TESTS = (
     "test_ingest_crash_recovery_exactly_once",
     "test_concurrent_staged_swap_raises_no_lost_update",
     "test_forget_entities_propagates_and_is_idempotent",
@@ -63,6 +58,28 @@ COMMIT_SLOW_TESTS = (
     "test_incremental_stats_refresh_equals_rebuild",
     "test_incremental_bloom_refresh_equals_rebuild",
 )
+# changed path prefix -> the SLOW_TESTS members that guard it
+SLOW_TESTS_BY_CODE = {
+    PKG + "sources/writers.py": _COMMIT_TESTS,
+    PKG + "sources/versioned.py": _COMMIT_TESTS,
+    PKG + "streaming/ops.py": _COMMIT_TESTS,
+    PKG + "featurestore/": _COMMIT_TESTS,
+    PKG + "textops/dedup.py": (
+        "test_cc_both_algorithms_match_union_find",
+        "test_two_phase_cc_closes_deep_chains",
+        "test_hot_bucket_cap_near_linear_on_dup_clique",
+        "test_simhash_identical_and_pairs",
+        "test_golden_records_matches_bruteforce_union_find",
+        "test_stream_ingest_corpus_dedup",
+        "test_multibatch_ingest_stability",
+        "test_dedup_stream_watermark_boundary",
+    ),
+    PKG + "textops/index_store.py": (
+        "test_index_maintenance_merged_equals_rebuilt",
+        "test_partitioned_layout_merged_equals_rebuilt",
+        "test_index_store_with_lloyd_refined_quantizers",
+    ),
+}
 
 
 def run(
@@ -75,26 +92,35 @@ def run(
     return proc.returncode == 0, out
 
 
-def commit_slow_tests() -> bool:
-    """Run :data:`COMMIT_SLOW_TESTS` when uncommitted changes touch
-    :data:`COMMIT_CODE`; True when skipped or when every one passed."""
-    print("== commit-code slow tests ==", flush=True)
-    changed = subprocess.run(
-        ["git", "status", "--porcelain", "--untracked-files=all", "--", *COMMIT_CODE],
+def guarded_slow_tests() -> bool:
+    """Run the :data:`SLOW_TESTS_BY_CODE` tests of every path prefix
+    with uncommitted changes; True when none changed or when every one
+    passed."""
+    print("== slow tests of changed code ==", flush=True)
+    status = subprocess.run(
+        ["git", "status", "--porcelain", "--untracked-files=all", "--",
+         *SLOW_TESTS_BY_CODE],
         cwd=REPO, capture_output=True, text=True,
-    ).stdout.strip()
-    if not changed:
-        print("skipped (commit code unchanged)")
+    ).stdout
+    changed = [line[3:].split(" -> ")[-1] for line in status.splitlines() if line.strip()]
+    tests = sorted({
+        t
+        for prefix, guards in SLOW_TESTS_BY_CODE.items()
+        if any(path.startswith(prefix) for path in changed)
+        for t in guards
+    })
+    if not tests:
+        print("skipped (guarded code unchanged)")
         return True
     ok, out = run(
-        "pytest -m slow (commit code)",
+        f"pytest -m slow ({len(tests)} guard tests)",
         [PY, "-m", "pytest", "tests/", "-q", "-p", "no:cacheprovider",
-         "-m", "slow", "-k", " or ".join(COMMIT_SLOW_TESTS)],
+         "-m", "slow", "-k", " or ".join(tests)],
     )
     m = re.search(r"(\d+) passed", out)
     passed = int(m.group(1)) if m else 0
     print(out.strip().splitlines()[-1] if out.strip() else "(no output)")
-    if not ok or passed < len(COMMIT_SLOW_TESTS):
+    if not ok or passed < len(tests):
         print(out[-3000:])
         return False
     return True
@@ -177,8 +203,8 @@ def main() -> int:
     if not ok:
         failures.append("compat35")
 
-    if not fast and not commit_slow_tests():
-        failures.append("commit-slow-tests")
+    if not fast and not guarded_slow_tests():
+        failures.append("guarded-slow-tests")
 
     # round-artifact hygiene: the per-round evidence files must be
     # committed, not drifting in the working tree (recurring verdict item
