@@ -541,7 +541,7 @@ module import order. Selection policy:
   write + multi-PIT path by in-window q_training_set_stress, the
   version-diff path by in-window q_training_set_refresh, and this
   round's collision validation by
-  `test_training_set_payload_collisions_raise_every_strategy`). And
+  `test_training_set_payload_collisions_raise`). And
   q_ext_semantic_contamination (embedding-level benchmark
   decontamination — broadcast benchmark, one corpus scan, map-side
   per-item max) rotates in for q_ext_multimodal_decode (OUT with

@@ -66,7 +66,6 @@ def create_training_set(
     spine: DataFrame,
     lookups: Sequence[FeatureLookup | WindowLookup],
     spine_time: str,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Left-join each feature table onto the spine as-of ``spine_time``;
     :class:`WindowLookup` entries additionally attach trailing-window
@@ -79,28 +78,17 @@ def create_training_set(
     before the spine timestamp wins; spine rows with no history keep NULL
     features (reference PIT semantics, ``joins.py:229-236``).
 
-    ``strategy``:
-
-    - ``"auto"`` (default): when EVERY lookup shares the same
-      ``lookup_keys``, all tables join in ONE shuffle via
-      :func:`point_in_time_multi_join` — the spine moves through one
-      exchange instead of one per table (5× less spine shuffle I/O for
-      a 5-table training set). Mixed keys fall back to the sequential
-      chain per key.
-    - ``"sequential"``: always chain single-table PIT joins (one
-      shuffle per table) — useful to compare plans or to stage
-      per-table tolerances during debugging.
-    - ``"multi"``: require the one-shuffle form (raises on mixed keys).
+    Lookups are grouped by their ``lookup_keys`` (first-seen order) and
+    each group joins in ONE :func:`point_in_time_multi_join` call, so the
+    spine moves through one exchange per distinct key set instead of one
+    per table (5× less spine shuffle I/O for a 5-table, one-key training
+    set). The output columns come back in lookup order.
 
     Payload column names must be disjoint across lookups AND from the
-    spine's own columns under EVERY strategy — a collision is validated
-    up front and raises (the sequential chain would otherwise emit a
-    duplicate output column name, an ambiguous frame downstream, not a
-    usable result). Rename feature columns before assembling.
+    spine's own columns — a collision is validated up front and raises
+    (a duplicate output column name is an ambiguous frame downstream,
+    not a usable result). Rename feature columns before assembling.
     """
-    if strategy not in ("auto", "sequential", "multi"):
-        raise ValueError(f"strategy must be auto|sequential|multi, got {strategy!r}")
-
     window_lookups = [lk for lk in lookups if isinstance(lk, WindowLookup)]
     lookups = [lk for lk in lookups if not isinstance(lk, WindowLookup)]
 
@@ -113,12 +101,6 @@ def create_training_set(
             )
         return manager.read(lk.table), ts_keys[0]
 
-    same_keys = len({tuple(lk.lookup_keys) for lk in lookups}) == 1
-    if strategy == "multi" and not same_keys:
-        raise ValueError(
-            "strategy='multi' requires every lookup to share the same lookup_keys"
-        )
-
     resolved = []
     for lk in lookups:
         features, ftime = resolve(lk)
@@ -127,86 +109,60 @@ def create_training_set(
         ]
         resolved.append((lk, features, ftime, fcols))
 
-    # validate payload-name disjointness up front for EVERY strategy: the
-    # sequential chain would otherwise emit duplicate output column names
-    # (both the spine-carried copy and the new feature copy), an ambiguous
-    # frame downstream — not a usable result
     seen: dict[str, str] = {c: "the spine" for c in spine.columns}
-    for lk, _features, _ftime, fcols in resolved:
-        for c in fcols:
-            if c in seen:
-                raise ValueError(
-                    f"create_training_set: feature column {c!r} from table "
-                    f"{lk.table!r} collides with {seen[c]} — rename before "
-                    "assembling"
-                )
-            seen[c] = f"table {lk.table!r}"
-    for wl in window_lookups:
-        for c in wl.output_names():
-            if c in seen:
-                raise ValueError(
-                    f"create_training_set: windowed feature column {c!r} from "
-                    f"table {wl.table!r} collides with {seen[c]} — rename "
-                    "before assembling"
-                )
-            seen[c] = f"window lookup on table {wl.table!r}"
-
-    def apply_window_lookups(frame: DataFrame) -> DataFrame:
-        from databricks_demo_feature_store_spark.operators.windows import (
-            trailing_multi_window_features,
-        )
-
-        for wl in window_lookups:
-            events, etime = resolve(
-                FeatureLookup(table=wl.table, lookup_keys=wl.lookup_keys)
+    named = [(c, f"table {lk.table!r}") for lk, _f, _t, fcols in resolved for c in fcols]
+    named += [
+        (c, f"window lookup on table {wl.table!r}")
+        for wl in window_lookups
+        for c in wl.output_names()
+    ]
+    for c, source in named:
+        if c in seen:
+            raise ValueError(
+                f"create_training_set: feature column {c!r} from {source} "
+                f"collides with {seen[c]} — rename before assembling"
             )
-            frame = trailing_multi_window_features(
-                frame,
-                events,
-                keys=list(wl.lookup_keys),
-                spine_time=spine_time,
-                event_time=etime,
-                windows=list(wl.windows),
-                sum_cols=list(wl.sum_cols),
-                count_col=wl.count_col,
-                scale=wl.scale,
-            )
-        return frame
+        seen[c] = source
 
-    if not lookups:
-        return apply_window_lookups(spine)
-
-    if same_keys and len(lookups) > 1 and strategy in ("auto", "multi"):
-        entries = [
+    groups: dict[tuple[str, ...], list[dict]] = {}
+    # the column order a chain of single-table joins gives: each join
+    # leads with its keys and the spine time, then appends its features
+    cols = list(spine.columns)
+    for lk, features, ftime, fcols in resolved:
+        groups.setdefault(tuple(lk.lookup_keys), []).append(
             {
                 "features": features,
                 "feature_time": ftime,
                 "feature_cols": fcols,
                 "tolerance_expr": lk.tolerance,
             }
-            for lk, features, ftime, fcols in resolved
-        ]
-        return apply_window_lookups(
-            point_in_time_multi_join(
-                spine,
-                entries,
-                keys=list(lookups[0].lookup_keys),
-                spine_time=spine_time,
-            )
         )
-
+        lead = [*lk.lookup_keys, spine_time]
+        cols = lead + [c for c in cols if c not in lead] + fcols
     out = spine
-    for lk, features, ftime, fcols in resolved:
-        out = point_in_time_join(
+    for keys, entries in groups.items():
+        out = point_in_time_multi_join(out, entries, keys=list(keys), spine_time=spine_time)
+    if resolved:
+        out = out.select(*cols)
+
+    from databricks_demo_feature_store_spark.operators.windows import (
+        trailing_multi_window_features,
+    )
+
+    for wl in window_lookups:
+        events, etime = resolve(FeatureLookup(table=wl.table, lookup_keys=wl.lookup_keys))
+        out = trailing_multi_window_features(
             out,
-            features,
-            keys=list(lk.lookup_keys),
+            events,
+            keys=list(wl.lookup_keys),
             spine_time=spine_time,
-            feature_time=ftime,
-            feature_cols=fcols,
-            tolerance_expr=lk.tolerance,
+            event_time=etime,
+            windows=list(wl.windows),
+            sum_cols=list(wl.sum_cols),
+            count_col=wl.count_col,
+            scale=wl.scale,
         )
-    return apply_window_lookups(out)
+    return out
 
 
 def latest_features(
@@ -367,10 +323,6 @@ def refresh_training_set(
     is a small fraction of reassembly.
     """
     keys = list(keys)
-    from databricks_demo_feature_store_spark.operators.joins import (
-        point_in_time_join,
-    )
-
     cols = (
         [*keys, feature_time, *(feature_cols or [])]
         if feature_cols is not None

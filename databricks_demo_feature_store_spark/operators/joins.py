@@ -58,6 +58,142 @@ def make_join(
     return joined
 
 
+def _asof_carry(
+    df_spine: DataFrame,
+    lookups: Sequence[tuple],
+    keys: Sequence[str],
+    spine_time: str,
+    direction: str = "backward",
+    matched_time_col: str | None = None,
+) -> DataFrame:
+    """The one as-of carry behind :func:`point_in_time_join`,
+    :func:`point_in_time_multi_join` and :func:`asof_join`.
+
+    ``lookups`` holds ``(features, feature_time, feature_cols,
+    tolerance_expr, tiebreak)`` tuples. The spine and every lookup are
+    tagged into ONE ``unionByName`` on ``(keys, __t)``; each lookup's
+    payload travels as its own struct slot, so the rows move through one
+    exchange on ``keys`` whatever the number of lookups. One window sort
+    per direction carries every slot with ``last(ignorenulls)`` — the
+    latest feature ROW wins whole (per-column carries would stitch values
+    from different rows whenever a newer value is legitimately NULL), and
+    slots carry independently of each other. The backward window orders
+    by ``__t`` ascending, the forward one descending; in both, feature
+    rows sort before spine rows at equal time (the reference's inclusive
+    ``>=``, ``joins.py:213-215``), then by the lookup's ``tiebreak``
+    columns, nulls first (the last one wins the carry).
+
+    ``tolerance_expr`` bounds the match distance on each side before the
+    ``"nearest"`` pick, whose exact ties go backward.
+    ``matched_time_col`` emits the matched feature time of the last
+    lookup (:func:`asof_join` passes one). Output: keys, spine time, the
+    spine's other columns, then each lookup's feature columns in order.
+    A feature column named like a spine column, a key, the spine time,
+    another lookup's column or the matched-time column raises — the
+    output would otherwise carry a duplicate, ambiguous name.
+    """
+    keys = list(keys)
+    spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
+    sides = [
+        df_spine.select(
+            *keys,
+            F.col(spine_time).cast("timestamp").alias("__t"),
+            F.lit(1).alias("__is_spine"),
+            F.struct(spine_time, *spine_cols).alias("__spine_payload"),
+        )
+    ]
+    looks, tiebreak_cols, names = [], [], []
+    for i, (features, ftime, fcols, tol, tiebreak) in enumerate(lookups):
+        if fcols is None:
+            fcols = [c for c in features.columns if c not in keys and c != ftime]
+        fcols = list(fcols)
+        names += fcols
+        tbs = [f"__tb{i}_{j}" for j in range(len(tiebreak))]
+        tiebreak_cols += tbs
+        looks.append((f"__feat{i}", fcols, tol))
+        sides.append(
+            features.select(
+                *keys,
+                F.col(ftime).cast("timestamp").alias("__t"),
+                F.lit(0).alias("__is_spine"),
+                F.struct(F.col(ftime).cast("timestamp").alias("__ft"), *fcols).alias(
+                    f"__feat{i}"
+                ),
+                *[F.col(c).alias(tb) for c, tb in zip(tiebreak, tbs)],
+            )
+        )
+    seen = set(df_spine.columns) | set(keys) | {spine_time}
+    for c in names + ([matched_time_col] if matched_time_col else []):
+        if c in seen:
+            raise ValueError(
+                f"as-of join: output column {c!r} collides with the spine's "
+                "columns/keys, another lookup or the matched-time column — "
+                "rename before joining"
+            )
+        seen.add(c)
+    unioned = sides[0]
+    for side in sides[1:]:
+        unioned = unioned.unionByName(side, allowMissingColumns=True)
+
+    dirs = ("backward", "forward") if direction == "nearest" else (direction,)
+
+    def window(d: str):
+        t = F.col("__t").asc() if d == "backward" else F.col("__t").desc()
+        return (
+            Window.partitionBy(*keys)
+            .orderBy(
+                t,
+                F.col("__is_spine").asc(),
+                *[F.col(tb).asc_nulls_first() for tb in tiebreak_cols],
+            )
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+
+    carried = unioned.select(
+        *keys,
+        "__is_spine",
+        "__spine_payload",
+        *[
+            F.last(slot, ignorenulls=True).over(window(d)).alias(f"{slot}_{d}")
+            for d in dirs
+            for slot, _fcols, _tol in looks
+        ],
+    ).filter(F.col("__is_spine") == 1)
+
+    st = F.col("__spine_payload").getField(spine_time).cast("timestamp")
+    out = [
+        *keys,
+        F.col("__spine_payload").getField(spine_time).alias(spine_time),
+        *[F.col("__spine_payload").getField(c).alias(c) for c in spine_cols],
+    ]
+    for slot, fcols, tol in looks:
+        side = {}
+        for d in dirs:
+            side[d] = F.col(f"{slot}_{d}")
+            if tol is not None:
+                ft = side[d].getField("__ft")
+                too_far = (
+                    ft < st - F.expr(tol) if d == "backward" else ft > st + F.expr(tol)
+                )
+                side[d] = F.when(too_far, F.lit(None)).otherwise(side[d])
+        if direction == "nearest":
+            back, fwd = side["backward"], side["forward"]
+            d_back = F.unix_micros(st) - F.unix_micros(back.getField("__ft"))
+            d_fwd = F.unix_micros(fwd.getField("__ft")) - F.unix_micros(st)
+            chosen = (
+                F.when(back.isNull(), fwd)
+                .when(fwd.isNull(), back)
+                .when(d_back <= d_fwd, back)  # exact tie -> backward
+                .otherwise(fwd)
+            )
+        else:
+            chosen = side[direction]
+        out += [chosen.getField(c).alias(c) for c in fcols]
+    if matched_time_col is not None:
+        out.append(chosen.getField("__ft").alias(matched_time_col))
+    return carried.select(*out)
+
+
 def point_in_time_join(
     df_spine: DataFrame,
     df_features: DataFrame,
@@ -77,13 +213,11 @@ def point_in_time_join(
     NULL`` (:229-236) so unmatched spine rows survive with NULL features.
 
     Scale note: the raw ``>=`` theta join is quadratic per key for long
-    histories. This implementation uses the **union + last-value** shape
-    instead: tag spine rows and feature rows, union them on the shared key
-    + time axis, and carry the latest feature values forward with a
-    ``last(ignorenulls=True)`` window. That is one shuffle on ``keys`` and
-    strictly linear in rows — it survives a 100× scale-up where the theta
-    join would explode. Ties (feature_time == spine_time) resolve to the
-    feature row, matching the reference's ``>=``.
+    histories. This rides the linear union + ``last(ignorenulls)`` carry
+    (:func:`_asof_carry`): one shuffle on ``keys``, strictly linear in
+    rows — it survives a 100× scale-up where the theta join would
+    explode. Ties (feature_time == spine_time) resolve to the feature
+    row, matching the reference's ``>=``.
 
     ``tolerance_expr`` (e.g. ``"INTERVAL 90 DAYS"``) optionally discards
     matches older than ``spine_time - tolerance``.
@@ -93,99 +227,12 @@ def point_in_time_join(
     makes the result deterministic without a pre-dedup window pass when
     the feature table can hold several rows per (key, time).
     """
-    keys = list(keys)
-    feature_tiebreak = list(feature_tiebreak)
-    if feature_cols is None:
-        feature_cols = [
-            c for c in df_features.columns if c not in keys and c != feature_time
-        ]
-    feature_cols = list(feature_cols)
-
-    spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
-
-    # Build a common shape: keys, event time, side tag, payloads from each side.
-    # The feature payload is carried as ONE struct so the latest feature ROW
-    # wins atomically — per-column last(ignorenulls) would stitch values from
-    # different rows whenever a newer feature value is legitimately NULL,
-    # diverging from the reference's whole-row row_number semantics.
-    right = df_features.select(
-        *keys,
-        F.col(feature_time).cast("timestamp").alias("__t"),
-        F.lit(0).alias("__is_spine"),
-        F.struct(
-            F.col(feature_time).cast("timestamp").alias("__ft"),
-            *[F.col(c) for c in feature_cols],
-        ).alias("__feat"),
-        *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(feature_tiebreak)],
+    return _asof_carry(
+        df_spine,
+        [(df_features, feature_time, feature_cols, tolerance_expr, list(feature_tiebreak))],
+        keys,
+        spine_time,
     )
-    left = df_spine.select(
-        *keys,
-        F.col(spine_time).cast("timestamp").alias("__t"),
-        F.lit(1).alias("__is_spine"),
-        F.struct(*[F.col(c) for c in ([spine_time] + spine_cols)]).alias(
-            "__spine_payload"
-        ),
-        F.lit(None).cast(right.schema["__feat"].dataType).alias("__feat"),
-        *[
-            F.lit(None).cast(df_features.schema[c].dataType).alias(f"__tb{i}")
-            for i, c in enumerate(feature_tiebreak)
-        ],
-    )
-    right = right.withColumn(
-        "__spine_payload",
-        F.lit(None).cast(left.schema["__spine_payload"].dataType),
-    )
-
-    unioned = left.unionByName(right)
-
-    # Feature rows sort before spine rows at equal time (__is_spine ASC) so a
-    # same-instant feature is visible to the spine row, reproducing `>=`;
-    # tiebreak columns order same-instant feature rows (last wins).
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(
-            F.col("__t").asc(),
-            F.col("__is_spine").asc(),
-            *[F.col(f"__tb{i}").asc_nulls_first() for i in range(len(feature_tiebreak))],
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.select(
-        *keys,
-        "__is_spine",
-        "__spine_payload",
-        F.last("__feat", ignorenulls=True).over(w).alias("__feat"),
-    )
-    carried = carried.select(
-        *keys,
-        "__is_spine",
-        "__spine_payload",
-        F.col("__feat").getField("__ft").alias("__matched_ft"),
-        *[F.col("__feat").getField(c).alias(c) for c in feature_cols],
-    )
-
-    result = carried.filter(F.col("__is_spine") == 1)
-    if tolerance_expr is not None:
-        too_old = F.col("__matched_ft") < (
-            F.col("__spine_payload").getField(spine_time).cast("timestamp")
-            - F.expr(tolerance_expr)
-        )
-        result = result.select(
-            *keys,
-            "__spine_payload",
-            *[
-                F.when(too_old, F.lit(None)).otherwise(F.col(c)).alias(c)
-                for c in feature_cols
-            ],
-        )
-
-    out_cols = (
-        keys
-        + [F.col("__spine_payload").getField(spine_time).alias(spine_time)]
-        + [F.col("__spine_payload").getField(c).alias(c) for c in spine_cols]
-        + [F.col(c) for c in feature_cols]
-    )
-    return result.select(*out_cols)
 
 
 def point_in_time_multi_join(
@@ -207,137 +254,27 @@ def point_in_time_multi_join(
     - ``tolerance_expr`` (optional): e.g. ``"INTERVAL 90 DAYS"`` — matches
       older than ``spine_time - tolerance`` are NULLed for that lookup
 
-    Scale shape: the sequential composition shuffles the (progressively
-    wider) spine once PER TABLE — N range exchanges + N windows over N
-    copies of the spine. Here every feature table is tagged into ONE
-    union on the shared ``(keys, time)`` axis, ONE window partitioned by
-    ``keys`` carries each table's latest row forward as its own struct
-    (``last(ignorenulls)`` per struct — whole-row atomicity per table,
-    independent carries across tables), and spine rows project all N
-    matches out. The spine data moves through exactly ONE exchange
-    regardless of N — at 100 TB with a 5-table training set that is 5×
-    less spine shuffle I/O. Used by
-    ``featurestore/training.py create_training_set`` whenever all
-    lookups share identical lookup keys.
+    Scale shape: a chain of single-table joins shuffles the
+    (progressively wider) spine once PER TABLE. Here every table is a
+    slot of the one carry (:func:`_asof_carry`) — whole-row atomicity per
+    table, independent carries across tables — so the spine moves
+    through exactly ONE exchange regardless of N: at 100 TB with a
+    5-table training set that is 5× less spine shuffle I/O.
 
     Ties (feature_time == spine_time) resolve to the feature row,
     matching the reference's ``>=`` (``joins.py:213-215``). Payload
-    column names must be disjoint across lookups (validated).
+    column names must be disjoint across lookups and from the spine's
+    columns (validated).
     """
-    keys = list(keys)
-    spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
-    looks = []
-    # seed with the spine's own output columns (keys, spine_time, payload):
-    # a feature column named like any of them would silently yield a
-    # duplicate output column name — later select-by-name becomes ambiguous
-    seen: set[str] = set(df_spine.columns) | set(keys) | {spine_time}
-    for i, lk in enumerate(lookups):
-        features = lk["features"]
-        ftime = lk["feature_time"]
-        fcols = lk.get("feature_cols")
-        if fcols is None:
-            fcols = [c for c in features.columns if c not in keys and c != ftime]
-        fcols = list(fcols)
-        dup = seen.intersection(fcols)
-        if dup:
-            raise ValueError(
-                f"point_in_time_multi_join: feature columns {sorted(dup)} "
-                "collide with the spine's columns/keys or another lookup — "
-                "rename before joining"
-            )
-        seen.update(fcols)
-        looks.append(
-            {
-                "features": features,
-                "ftime": ftime,
-                "fcols": fcols,
-                "tol": lk.get("tolerance_expr"),
-                "slot": f"__feat{i}",
-            }
-        )
-
-    def feat_struct(lk) -> F.Column:
-        return F.struct(
-            F.col(lk["ftime"]).cast("timestamp").alias("__ft"),
-            *[F.col(c) for c in lk["fcols"]],
-        )
-
-    # one tagged frame per side, unioned on the shared (keys, time) axis
-    sides = []
-    spine_payload_t = None
-    left = df_spine.select(
-        *keys,
-        F.col(spine_time).cast("timestamp").alias("__t"),
-        F.lit(1).alias("__is_spine"),
-        F.struct(*[F.col(c) for c in ([spine_time] + spine_cols)]).alias(
-            "__spine_payload"
-        ),
-    )
-    spine_payload_t = left.schema["__spine_payload"].dataType
-    slot_types = {}
-    for lk in looks:
-        probe = lk["features"].select(feat_struct(lk).alias(lk["slot"]))
-        slot_types[lk["slot"]] = probe.schema[lk["slot"]].dataType
-    left = left.select(
-        "*",
-        *[
-            F.lit(None).cast(slot_types[lk["slot"]]).alias(lk["slot"])
-            for lk in looks
+    return _asof_carry(
+        df_spine,
+        [
+            (lk["features"], lk["feature_time"], lk.get("feature_cols"),
+             lk.get("tolerance_expr"), ())
+            for lk in lookups
         ],
-    )
-    sides.append(left)
-    for lk in looks:
-        right = lk["features"].select(
-            *keys,
-            F.col(lk["ftime"]).cast("timestamp").alias("__t"),
-            F.lit(0).alias("__is_spine"),
-            F.lit(None).cast(spine_payload_t).alias("__spine_payload"),
-            *[
-                (feat_struct(lk) if other["slot"] == lk["slot"]
-                 else F.lit(None).cast(slot_types[other["slot"]]))
-                .alias(other["slot"])
-                for other in looks
-            ],
-        )
-        sides.append(right)
-    unioned = sides[0]
-    for s in sides[1:]:
-        unioned = unioned.unionByName(s)
-
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__t").asc(), F.col("__is_spine").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.select(
-        *keys,
-        "__is_spine",
-        "__spine_payload",
-        *[
-            F.last(lk["slot"], ignorenulls=True).over(w).alias(lk["slot"])
-            for lk in looks
-        ],
-    ).filter(F.col("__is_spine") == 1)
-
-    st = F.col("__spine_payload").getField(spine_time).cast("timestamp")
-    out_feature_cols = []
-    for lk in looks:
-        slot = F.col(lk["slot"])
-        cond = None
-        if lk["tol"] is not None:
-            cond = slot.getField("__ft") < (st - F.expr(lk["tol"]))
-        for c in lk["fcols"]:
-            v = slot.getField(c)
-            if cond is not None:
-                v = F.when(cond, F.lit(None)).otherwise(v)
-            out_feature_cols.append(v.alias(c))
-    return carried.select(
-        *keys,
-        F.col("__spine_payload").getField(spine_time).alias(spine_time),
-        *[
-            F.col("__spine_payload").getField(c).alias(c) for c in spine_cols
-        ],
-        *out_feature_cols,
+        keys,
+        spine_time,
     )
 
 
@@ -514,12 +451,12 @@ def asof_join(
     matched_time_col: str | None = None,
 ) -> DataFrame:
     """Direction-aware as-of join — the pandas ``merge_asof`` surface on
-    the engine's linear union+carry machinery.
+    the engine's linear union+carry (:func:`_asof_carry`).
 
     ``direction``:
 
     - ``"backward"``: latest feature row at-or-before the spine time
-      (delegates to :func:`point_in_time_join` — identical semantics).
+      (the :func:`point_in_time_join` semantics).
     - ``"forward"``: EARLIEST feature row at-or-after the spine time
       (the mirror carry: same one-shuffle union, window ordered time-
       DESCENDING so the next-following feature row flows backward to
@@ -545,118 +482,14 @@ def asof_join(
         raise ValueError(
             f"direction must be backward|forward|nearest, got {direction!r}"
         )
-    keys = list(keys)
-    if feature_cols is None:
-        feature_cols = [
-            c for c in df_features.columns if c not in keys and c != feature_time
-        ]
-    feature_cols = list(feature_cols)
-    spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
-    dup = set(feature_cols) & set(df_spine.columns)
-    if matched_time_col is not None and (
-        matched_time_col in df_spine.columns or matched_time_col in feature_cols
-    ):
-        dup.add(matched_time_col)
-    if dup:
-        raise ValueError(
-            f"asof_join: output columns {sorted(dup)} collide with the "
-            "spine's columns — rename before joining"
-        )
-    if direction == "backward" and matched_time_col is None:
-        return point_in_time_join(
-            df_spine,
-            df_features,
-            keys=keys,
-            spine_time=spine_time,
-            feature_time=feature_time,
-            feature_cols=feature_cols,
-            tolerance_expr=tolerance_expr,
-        )
-
-    right = df_features.select(
-        *keys,
-        F.col(feature_time).cast("timestamp").alias("__t"),
-        F.lit(0).alias("__is_spine"),
-        F.struct(
-            F.col(feature_time).cast("timestamp").alias("__ft"),
-            *[F.col(c) for c in feature_cols],
-        ).alias("__feat"),
+    return _asof_carry(
+        df_spine,
+        [(df_features, feature_time, feature_cols, tolerance_expr, ())],
+        keys,
+        spine_time,
+        direction=direction,
+        matched_time_col=matched_time_col,
     )
-    left = df_spine.select(
-        *keys,
-        F.col(spine_time).cast("timestamp").alias("__t"),
-        F.lit(1).alias("__is_spine"),
-        F.struct(*[F.col(c) for c in ([spine_time] + spine_cols)]).alias(
-            "__spine_payload"
-        ),
-        F.lit(None).cast(right.schema["__feat"].dataType).alias("__feat"),
-    )
-    right = right.withColumn(
-        "__spine_payload",
-        F.lit(None).cast(left.schema["__spine_payload"].dataType),
-    )
-    unioned = left.unionByName(right)
-
-    # same-instant feature rows must be visible to the spine row in BOTH
-    # carries (>= / <= inclusive): features sort before spine at equal __t
-    w_back = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__t").asc(), F.col("__is_spine").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__t").desc(), F.col("__is_spine").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carries = []
-    if direction in ("backward", "nearest"):
-        carries.append(F.last("__feat", ignorenulls=True).over(w_back).alias("__back"))
-    if direction in ("forward", "nearest"):
-        carries.append(F.last("__feat", ignorenulls=True).over(w_fwd).alias("__fwd"))
-    carried = (
-        unioned.select(*keys, "__is_spine", "__spine_payload", *carries)
-        .filter(F.col("__is_spine") == 1)
-    )
-
-    st = F.col("__spine_payload").getField(spine_time).cast("timestamp")
-
-    def _tol_null(side: F.Column, is_back: bool) -> F.Column:
-        if tolerance_expr is None:
-            return side
-        ft = side.getField("__ft")
-        out_of_tol = (
-            ft < (st - F.expr(tolerance_expr))
-            if is_back
-            else ft > (st + F.expr(tolerance_expr))
-        )
-        return F.when(side.isNull() | out_of_tol, F.lit(None)).otherwise(side)
-
-    if direction == "backward":
-        chosen = _tol_null(F.col("__back"), True)
-    elif direction == "forward":
-        chosen = _tol_null(F.col("__fwd"), False)
-    else:
-        back = _tol_null(F.col("__back"), True)
-        fwd = _tol_null(F.col("__fwd"), False)
-        d_back = F.unix_micros(st) - F.unix_micros(back.getField("__ft"))
-        d_fwd = F.unix_micros(fwd.getField("__ft")) - F.unix_micros(st)
-        chosen = (
-            F.when(back.isNull(), fwd)
-            .when(fwd.isNull(), back)
-            .when(d_back <= d_fwd, back)  # exact tie -> backward
-            .otherwise(fwd)
-        )
-    picked = carried.select(*keys, "__spine_payload", chosen.alias("__chosen"))
-    out_cols = (
-        keys
-        + [F.col("__spine_payload").getField(spine_time).alias(spine_time)]
-        + [F.col("__spine_payload").getField(c).alias(c) for c in spine_cols]
-        + [F.col("__chosen").getField(c).alias(c) for c in feature_cols]
-    )
-    if matched_time_col is not None:
-        out_cols.append(F.col("__chosen").getField("__ft").alias(matched_time_col))
-    return picked.select(*out_cols)
 
 
 def scd2_dim_join(

@@ -65,6 +65,8 @@ STATS_SCHEMA = (
     "min_str string, max_str string, null_count long, n_rows long, "
     "has_stats boolean"
 )
+# footers per harvest slice for short file lists (see _files_df)
+_FILES_PER_SLICE = 8
 
 
 def _list_part_files(table_path: str) -> list[str]:
@@ -92,14 +94,7 @@ def _files_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
     slices keeps cold-start worker imports concurrent — coalescing to 1
     slice serializes every footer read through one worker and loses 2×
     (the round-14 item-9 measured negative). Large lists keep
-    defaultParallelism slices, so cluster-scale harvests are unchanged.
-    ``SPARK_GRAFT_HARVEST_FILES_PER_SLICE=0`` restores the plain
-    defaultParallelism fan-out (read per call for A/B measurement)."""
-    per_slice = int(os.environ.get("SPARK_GRAFT_HARVEST_FILES_PER_SLICE", "8"))
-    if per_slice <= 0:
-        return spark.createDataFrame(
-            [(f,) for f in files], "file_path string"
-        )
+    defaultParallelism slices, so cluster-scale harvests are unchanged."""
     n = len(files)
     if n == 0:
         # parallelize(..., 0) raises; an empty list can reach here when a
@@ -107,7 +102,7 @@ def _files_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
         return spark.createDataFrame([], "file_path string")
     slices = max(
         min(n, 4),
-        min(spark.sparkContext.defaultParallelism, -(-n // per_slice)),
+        min(spark.sparkContext.defaultParallelism, -(-n // _FILES_PER_SLICE)),
     )
     return spark.createDataFrame(
         spark.sparkContext.parallelize([(f,) for f in files], slices),

@@ -14,6 +14,7 @@ from databricks_demo_feature_store_spark.featurestore import (
     create_training_set,
 )
 from databricks_demo_feature_store_spark.featurestore.training import FeatureLookup
+from databricks_demo_feature_store_spark.operators.joins import point_in_time_join
 
 
 @pytest.fixture()
@@ -196,9 +197,25 @@ def test_latest_features_snapshot(spark):
     assert 3 not in snap
 
 
+def _pit_chain(manager, labels, lookups):
+    """Reference for create_training_set: a chain of single-table PIT
+    joins, one per lookup, on the tables' release date."""
+    chain = labels
+    for lk in lookups:
+        chain = point_in_time_join(
+            chain,
+            manager.read(lk.table),
+            keys=list(lk.lookup_keys),
+            spine_time="label_dt",
+            feature_time="tpk_release_dt",
+            tolerance_expr=lk.tolerance,
+        )
+    return chain
+
+
 def test_multi_lookup_pit_matches_sequential(spark, manager):
-    """The one-shuffle multi-table PIT join must be value-identical to
-    the sequential chain on every edge: ties (feature at the spine
+    """The one-shuffle training set must be value-identical to a chain
+    of single-table PIT joins on every edge: ties (feature at the spine
     instant wins), unmatched spine rows (NULL features), per-lookup
     tolerance null-out, and tables with different release cadences."""
     f_a = spark.createDataFrame(
@@ -244,28 +261,71 @@ def test_multi_lookup_pit_matches_sequential(spark, manager):
         ),
     ]
 
-    def rows(strategy):
-        out = create_training_set(
-            manager, labels, lookups, spine_time="label_dt", strategy=strategy
-        )
-        return {
-            tuple(r[c] for c in sorted(out.columns)) for r in out.collect()
-        }
-
-    multi = rows("multi")
-    seq = rows("sequential")
-    assert multi == seq
+    out = create_training_set(manager, labels, lookups, spine_time="label_dt")
+    chain = _pit_chain(manager, labels, lookups)
+    assert out.columns == chain.columns
+    assert sorted(out.collect(), key=repr) == sorted(chain.collect(), key=repr)
     # spot-check the semantics directly (fa, fb) per (customer, label_dt)
     by_key = {}
-    out = create_training_set(
-        manager, labels, lookups, spine_time="label_dt", strategy="multi"
-    )
     for r in out.collect():
         by_key[(r["pk_customer"], str(r["label_dt"]))] = (r["fa"], r["fb"])
     assert by_key[(1, "2024-01-15")] == (10.0, None)   # fb stale → tolerance NULL
     assert by_key[(1, "2024-03-01")] == (20.0, None)
     assert by_key[(2, "2024-02-15")] == (5.0, 200)     # tie resolves to feature
     assert by_key[(3, "2024-03-01")] == (None, None)   # unmatched spine survives
+
+
+def test_mixed_key_training_set_one_window_per_key_set(spark, manager):
+    """Lookups on two key sets plan one Window (one spine exchange) per
+    key set, not one per table, and still equal the chain of
+    single-table PIT joins — values and column order."""
+    import re
+
+    tables = {
+        "mk_a": spark.createDataFrame(
+            [(1, dt.date(2024, 1, 1), 10.0), (2, dt.date(2024, 2, 15), 5.0)],
+            "pk_customer int, tpk_release_dt date, fa double",
+        ),
+        "mk_region": spark.createDataFrame(
+            [("n", dt.date(2024, 1, 1), 1), ("n", dt.date(2024, 3, 1), 2)],
+            "region string, tpk_release_dt date, fr int",
+        ),
+        "mk_b": spark.createDataFrame(
+            [(1, dt.date(2023, 1, 1), 100), (2, dt.date(2024, 2, 10), 200)],
+            "pk_customer int, tpk_release_dt date, fb int",
+        ),
+    }
+    for name, frame in tables.items():
+        keys = tuple(frame.columns[:2])
+        manager.save(
+            frame,
+            FeatureTableSpec(name=name, primary_keys=keys, timestamp_keys=keys[1:]),
+            mode="overwrite",
+        )
+    labels = spark.createDataFrame(
+        [
+            (1, "n", dt.date(2024, 1, 15), 1),
+            (2, "n", dt.date(2024, 2, 15), 0),  # tie with mk_a's release
+            (3, "s", dt.date(2024, 3, 1), 1),   # no history anywhere
+        ],
+        "pk_customer int, region string, label_dt date, y int",
+    )
+    lookups = [
+        FeatureLookup(table="mk_a", lookup_keys=("pk_customer",)),
+        FeatureLookup(table="mk_region", lookup_keys=("region",)),
+        FeatureLookup(
+            table="mk_b", lookup_keys=("pk_customer",), tolerance="INTERVAL 90 DAYS"
+        ),
+    ]
+    out = create_training_set(manager, labels, lookups, spine_time="label_dt")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"^[\s:+\-]*Window \[", plan, re.MULTILINE)) == 2, plan
+
+    chain = _pit_chain(manager, labels, lookups)
+    assert out.columns == chain.columns
+    assert sorted(out.collect(), key=repr) == sorted(chain.collect(), key=repr)
+    got = {r["pk_customer"]: (r["fa"], r["fr"], r["fb"]) for r in out.collect()}
+    assert got == {1: (10.0, 1, None), 2: (5.0, 1, 200), 3: (None, None, None)}
 
 
 def test_negative_samples_properties(spark):
@@ -374,11 +434,10 @@ def test_store_doctor_flags_pk_violations(spark, manager):
     assert d["max_ts"] is None  # no timestamp key declared
 
 
-def test_training_set_payload_collisions_raise_every_strategy(spark, manager):
+def test_training_set_payload_collisions_raise(spark, manager):
     """A feature column colliding with the spine's columns or with another
-    lookup must raise up front under EVERY strategy — the sequential chain
-    would otherwise emit duplicate output column names (an ambiguous
-    frame), not a usable result."""
+    lookup must raise up front — a duplicate output column name is an
+    ambiguous frame, not a usable result."""
     import pytest
 
     f_a = spark.createDataFrame(
@@ -406,23 +465,16 @@ def test_training_set_payload_collisions_raise_every_strategy(spark, manager):
         FeatureLookup(table="coll_a", lookup_keys=("pk_customer",)),
         FeatureLookup(table="coll_b", lookup_keys=("pk_customer",)),
     ]
-    for strategy in ("auto", "sequential", "multi"):
-        with pytest.raises(ValueError, match="collides"):
-            create_training_set(
-                manager, labels, lookups, spine_time="label_dt", strategy=strategy
-            )
+    with pytest.raises(ValueError, match="collides"):
+        create_training_set(manager, labels, lookups, spine_time="label_dt")
     # collision with a SPINE column (the label itself) raises too
     spine_coll = [
         FeatureLookup(table="coll_a", lookup_keys=("pk_customer",),
                       feature_names=("f1",)),
     ]
     labels_y = labels.withColumnRenamed("y", "f1")
-    for strategy in ("auto", "sequential"):
-        with pytest.raises(ValueError, match="collides"):
-            create_training_set(
-                manager, labels_y, spine_coll, spine_time="label_dt",
-                strategy=strategy,
-            )
+    with pytest.raises(ValueError, match="collides"):
+        create_training_set(manager, labels_y, spine_coll, spine_time="label_dt")
 
 
 def test_multi_join_rejects_spine_column_collision(spark):

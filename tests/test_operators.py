@@ -395,7 +395,11 @@ def test_scan_fanout_noop_when_already_parallel(spark, tmp_path):
     ).repartition(64).write.parquet(str(wide_dir / "documents.parquet"))
     df = load(spark, str(wide_dir), "documents")
     assert _SCAN_FANOUT[(str(wide_dir), "documents")] is False
-    assert df.rdd.getNumPartitions() >= 32  # kept its native splits
+    # kept its native splits: as many as a plain read (Spark packs the
+    # small files into about one split per core), and no repartition
+    plain = spark.read.parquet(str(wide_dir / "documents.parquet"))
+    assert df.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
+    assert "Repartition" not in df._jdf.queryExecution().optimizedPlan().toString()
 
     # single-file single-row-group table: fan-out kicks in
     narrow_dir = tmp_path / "sfnarrow"
@@ -1622,7 +1626,10 @@ def test_scd2_dim_join_rejects_column_collision(spark):
 def test_asof_and_window_output_collisions_raise(spark):
     import datetime as _dt
 
-    from databricks_demo_feature_store_spark.operators.joins import asof_join
+    from databricks_demo_feature_store_spark.operators.joins import (
+        asof_join,
+        point_in_time_join,
+    )
     from databricks_demo_feature_store_spark.operators.windows import (
         trailing_window_features,
     )
@@ -1638,6 +1645,10 @@ def test_asof_and_window_output_collisions_raise(spark):
         with pytest.raises(ValueError, match="collide"):
             asof_join(spine, feats, keys=["k"], spine_time="ts",
                       feature_time="ft", direction=direction)
+    # the plain PIT join applies the same rule
+    with pytest.raises(ValueError, match="collide"):
+        point_in_time_join(spine, feats, keys=["k"], spine_time="ts",
+                           feature_time="ft")
     # matched_time_col colliding with a spine column raises too
     with pytest.raises(ValueError, match="collide"):
         asof_join(spine, feats.withColumnRenamed("v", "fv"), keys=["k"],

@@ -19,7 +19,9 @@ JVM/session and one step's config can't mask another's failure):
    (functions + object methods); fails on any unratcheted usage.
 6. Slow tests guarding changed code — for every path prefix in
    :data:`SLOW_TESTS_BY_CODE` with uncommitted changes (the commit
-   code, ``textops/dedup.py``, ``textops/index_store.py``), runs its
+   code, the as-of joins in ``operators/joins.py`` and
+   ``featurestore/training.py``, ``textops/dedup.py``,
+   ``textops/index_store.py``, ``textops/similarity.py``), runs its
    slow tests with ``-m slow`` (they are deselected by default); fails
    unless every one passes.
 7. Round-artifact hygiene — fails on untracked or modified
@@ -58,8 +60,19 @@ _COMMIT_TESTS = (
     "test_incremental_stats_refresh_equals_rebuild",
     "test_incremental_bloom_refresh_equals_rebuild",
 )
+# tests/conftest.py SLOW_TESTS members that replay the as-of carry
+# (operators/joins.py _asof_carry) against brute force
+_ASOF_TESTS = (
+    "test_pit_join_matches_bruteforce",
+    "test_multi_pit_matches_sequential_chain",
+    "test_asof_join_all_directions_match_brute_force",
+    "test_asof_join_directions",
+    "test_point_in_time_join_property_vs_naive",
+)
 # changed path prefix -> the SLOW_TESTS members that guard it
 SLOW_TESTS_BY_CODE = {
+    PKG + "operators/joins.py": _ASOF_TESTS,
+    PKG + "featurestore/training.py": _ASOF_TESTS,
     PKG + "sources/writers.py": _COMMIT_TESTS,
     PKG + "sources/versioned.py": _COMMIT_TESTS,
     PKG + "streaming/ops.py": _COMMIT_TESTS,
@@ -79,6 +92,7 @@ SLOW_TESTS_BY_CODE = {
         "test_partitioned_layout_merged_equals_rebuilt",
         "test_index_store_with_lloyd_refined_quantizers",
     ),
+    PKG + "textops/similarity.py": ("test_semantic_dedup_matches_bruteforce",),
 }
 
 
